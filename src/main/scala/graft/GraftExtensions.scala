@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{RewriteWindowTopK, TopKPerKey}
+import graft.plans.{KnnJoin, RewriteWindowTopK, TopKPerKey}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  *
  *   spark.sql.extensions=graft.GraftExtensions
  *
- * injects the optimizer rule + planning strategy AND the whole SQL
+ * injects the optimizer rule + planning strategies AND the whole SQL
  * function surface (vector/mask/sketch + tsearch/ltree/crypt/
  * fuzzystrmatch + jsonb/hstore/intarray/earthdistance — r16) at
  * session build time, so `spark.sql("SELECT to_tsvector(t) ...")`
@@ -25,6 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((_, delegate) => new graft.plans.PgSqlParser(delegate))
     ext.injectOptimizerRule(_ => RewriteWindowTopK)
     ext.injectPlannerStrategy(_ => TopKPerKey.strategy)
+    ext.injectPlannerStrategy(_ => KnnJoin.strategy)
     graft.functions.SqlFunctions.allBuilders.foreach { case (name, b) =>
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", name), exprs => b(exprs)))

@@ -3,8 +3,11 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
 
 /**
  * Dev/measurement tool (guide §1): for each named query, write
@@ -12,7 +15,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
  * one-line breakdown — construction seconds (plan-time jobs included),
  * timed noop-sink execution seconds, and the JOB / STAGE / TASK counts
  * observed in each phase. Multi-job queries (driver-side loops, eager
- * statement routing) show up immediately as high job counts.
+ * statement routing) show up immediately as high job counts. The dump
+ * ends with every physical node's SQLMetrics from the timed run (e.g.
+ * KnnJoin's pairs / pairs_pruned / pairs_rounded).
  *
  *   sbt "runMain graft.PlanDump <sfDir> <outDir> <name> [<name>...]"
  *
@@ -56,6 +61,16 @@ object PlanDump {
     })
     def snap(): (Int, Int, Int, Long) =
       (jobs.get(), stages.get(), tasks.get(), taskMs.get())
+    val lastRun = new AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = lastRun.set(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
 
     val qs = SparkEntry.queries
     for (name <- args.drop(2)) {
@@ -74,12 +89,18 @@ object PlanDump {
       val (j1, s1, t1c, m1) = snap()
       val planText = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/$name.txt"), planText)
+      lastRun.set(null)
       val te0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val te1 = System.nanoTime()
       Thread.sleep(300)
       val (j2, s2, t2c, m2) = snap()
+      val metricText = Option(lastRun.get()).toSeq.flatMap(qe => nodes(qe.executedPlan))
+        .filter(_.metrics.nonEmpty)
+        .map(n => s"${n.nodeName}: " + n.metrics.toSeq.sortBy(_._1)
+          .collect { case (k, m) if m.value != 0 => s"$k=${m.value}" }.mkString(", "))
+      Files.writeString(Paths.get(s"$outDir/$name.txt"), planText +
+        metricText.mkString("\n== SQL metrics (timed run) ==\n", "\n", "\n"))
       println(f"PLANDUMP $name construct=${(tc1 - tc0) / 1e9}%.3fs " +
         f"(jobs=${j1 - j0} stages=${s1 - s0} tasks=${t1c - t0c} taskMs=${m1 - m0}) " +
         f"exec=${(te1 - te0) / 1e9}%.3fs " +

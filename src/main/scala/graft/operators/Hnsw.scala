@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorKernel
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -48,20 +49,8 @@ object Hnsw {
   final case class GraphRow(part_id: Int, id: Long, vec: Array[Float],
       nbrs: Array[Int])
 
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-    acc
-  }
-
-  private def l1(a: Array[Float], b: Array[Float]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += math.abs(a(i).toDouble - b(i).toDouble); i += 1 }
-    acc
-  }
-
   private def distFn(metric: String): (Array[Float], Array[Float]) => Double =
-    if (metric == "l1") l1 else l2sq
+    if (metric == "l1") VectorKernel.l1 else VectorKernel.l2sq
 
   /** The beam works on squared L2 (sqrt at the end) or raw L1. */
   private def finalizeDist(metric: String, d: Double): Double =

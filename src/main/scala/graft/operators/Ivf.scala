@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{VectorFunctions => VF}
+import graft.functions.{VectorKernel, VectorFunctions => VF}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
@@ -24,16 +24,10 @@ object Ivf {
     def nlists: Int = centroids.length
 
     /** Nearest-centroid list ids for one query vector, best first. */
-    def probes(q: Array[Float], nprobe: Int): Seq[Int] = {
-      def l2sq(a: Array[Float], b: Array[Float]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-        acc
-      }
+    def probes(q: Array[Float], nprobe: Int): Seq[Int] =
       centroids.indices
-        .sortBy(i => (l2sq(q, centroids(i)), i))
+        .sortBy(i => (VectorKernel.l2sq(q, centroids(i)), i))
         .take(nprobe)
-    }
   }
 
   /** Train list centroids with MLlib k-means (deterministic under
@@ -267,17 +261,25 @@ object Ivf {
       tagged: DataFrame, vecCol: String, idCol: String, model: Model,
       k: Int, nprobe: Int): DataFrame = {
     val cents: Column = typedlit(model.centroids.map(_.toSeq).toSeq)
-    val dists = transform(cents, c => VF.l2SquaredDistance(col(qVecCol), c))
+    // bound to `queries` itself: a bare col(qVecCol) inside the lambda
+    // would resolve against the "qv" alias of the select below when the
+    // caller's column is itself named qv
+    val qv = queries(qVecCol)
+    val dists = transform(cents, c => VF.l2SquaredDistance(qv, c))
     // probe lists per query: indices of the nprobe smallest centroid dists
     val probes = slice(transform(array_sort(
       zip_with(dists, sequence(lit(0), lit(model.nlists - 1)),
         (d, i) => struct(d.as("d"), i.as("i")))),
       s => s.getField("i")), 1, nprobe)
-    val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).as("qv"),
+    val q = queries.select(col(qIdCol).as("qid"), qv.as("qv"),
         explode(probes).as("list_id"))
-    val joined = q.join(tagged, Seq("list_id"))
-      .select(col("qid"), col(idCol).cast("long").as("nid"),
-        round(VF.l2Distance(col(vecCol), col("qv")), 6).as("dist"))
+    // only the join key survives on both sides: the corpus may carry
+    // columns named like the query side's (qid, qv)
+    val c = tagged.select(col("list_id"), col(idCol).cast("long").as("nid"),
+      col(vecCol).as("cv"))
+    val joined = q.join(c, Seq("list_id"))
+      .select(col("qid"), col("nid"),
+        round(VF.l2Distance(col("cv"), col("qv")), 6).as("dist"))
     // bounded-heap partial agg: the qid shuffle carries <= k rows per
     // (query, partition), not the candidate set
     Knn.explodeTopK(joined.groupBy(col("qid"))
@@ -368,13 +370,9 @@ object Ivf {
   def rangeSearch(tagged: DataFrame, vecCol: String, idCol: String,
       model: Model, radii: Array[Double], query: Array[Float],
       eps: Double): DataFrame = {
-    def l2(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-      math.sqrt(acc)
-    }
     val keep = model.centroids.indices
-      .filter(i => l2(query, model.centroids(i)) - radii(i) <= eps + 1e-6)
+      .filter(i => math.sqrt(VectorKernel.l2sq(query, model.centroids(i))) - radii(i)
+        <= eps + 1e-6)
       .map(Integer.valueOf)
     tagged
       .filter(col("list_id").isin(keep: _*))

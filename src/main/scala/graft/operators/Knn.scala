@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.functions.{TopKPairsAgg, VectorFunctions => VF}
+import graft.functions.{TopKPairsAgg, VectorMetrics, VectorFunctions => VF}
+import graft.plans.KnnJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -12,9 +13,12 @@ import org.apache.spark.sql.graft.Bridge
  * Scale design (SURVEY §5):
  *  - single-query top-k compiles to TakeOrderedAndProject: per-partition
  *    O(k) heap, driver merge of #partitions × k rows — no shuffle, no sort.
- *  - knn join broadcasts the query side and aggregates a bounded heap per
- *    query id: map-side partial heaps mean the shuffle carries at most
- *    k rows per (query, partition), never the corpus.
+ *  - knn join is one fused scan ([[graft.plans.KnnJoinExec]]): the query
+ *    side is broadcast, each corpus task scores every row against every
+ *    query into one bounded heap per query, abandoning a candidate once
+ *    its partial distance passes the heap's k-th best, and emits at most
+ *    k rows per (query, partition). A top-k aggregate per query id merges
+ *    them, so the shuffle never carries the corpus.
  */
 object Knn {
 
@@ -57,18 +61,20 @@ object Knn {
         col("e.nid").as("nid"), col("e.dist").as("dist"))
 
   /**
-   * KNN join: for every row of `queries`, the k nearest rows of `corpus`.
-   * Output: (qid, rank, id, dist). `queries` must be small enough to
-   * broadcast (the common shape: |Q| ≪ |corpus|).
+   * KNN join: for every row of `queries`, the k nearest rows of `corpus`
+   * under `metric` (a [[VectorMetrics]] name). Output: (qid, rank, nid,
+   * dist), dist rounded to 6 places, ties broken on nid — the values of
+   * `round(dist(vec, qv), 6)` ranked per query. Vectors are read as
+   * array<float>; rows with a null id or vector and queries with a null
+   * vector are skipped. `queries` must be small enough to broadcast (the
+   * common shape: |Q| ≪ |corpus|).
    */
   def knnJoin(queries: DataFrame, qVecCol: String, qIdCol: String,
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
-      dist: (Column, Column) => Column = VF.l2Distance): DataFrame = {
-    val q = broadcast(queries.select(col(qIdCol).as("qid"), col(qVecCol).as("qv")))
-    val pairs = corpus.crossJoin(q)
-      .select(col("qid"), col(idCol).cast("long").as("nid"),
-        round(dist(col(vecCol), col("qv")), 6).as("dist"))
-    explodeTopK(pairs
+      metric: String = VectorMetrics.L2): DataFrame = {
+    val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).cast("array<float>").as("qv"))
+    val c = corpus.select(col(idCol).cast("long").as("nid"), col(vecCol).cast("array<float>").as("v"))
+    explodeTopK(KnnJoin.pairs(c, q, k, metric)
       .groupBy(col("qid"))
       .agg(topKPairs(col("nid"), col("dist"), k).as("nn")))
   }

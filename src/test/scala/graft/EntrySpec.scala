@@ -21,6 +21,7 @@ class EntrySpec extends SparkSpec {
       org.apache.spark.sql.graft.Bridge.injectedRulesAndStrategies(ext, spark)
     assert(rules.contains(graft.plans.RewriteWindowTopK))
     assert(strategies.contains(graft.plans.TopKPerKey.strategy))
+    assert(strategies.contains(graft.plans.KnnJoin.strategy))
     // the whole SQL-name surface injects at session build (r16)
     val names =
       org.apache.spark.sql.graft.Bridge.injectedFunctionNames(ext).toSet

@@ -86,6 +86,9 @@ class PlanContractSpec extends SparkSpec {
     val p = plan("knn_join")
     assert(p.contains("topk_pairs"), "bounded-heap aggregate missing")
     assert(p.contains("ObjectHashAggregate"))
+    // one fused query x corpus scan, never a per-pair join
+    assert(p.contains("KnnJoin"), "fused knn join node missing")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
 
   test("pq searches shortlist via bounded heaps and never sort-merge-join") {
