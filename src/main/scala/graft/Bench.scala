@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main (driver contract): runs the headline query set on
  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -36,7 +34,7 @@ object Bench {
   // of 3 always land inside the budget with slack for a contended
   // machine. The full per-query correctness surface is
   // CORRECTNESS_r{N}; per-operator timings beyond the family
-  // representative come from graft.TimeQuery during development.
+  // representative come from graft.PlanDump during development.
   val headline: Seq[String] = Seq(
     // TPC-H / relational core (one per join/agg/window/maintenance family)
     "q1_pricing", "q3_shipping", "q6_forecast",
@@ -93,29 +91,7 @@ object Bench {
     // the budget — coverage always completes; B and C respect it.
     val budget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
       .flatMap(_.trim.toDoubleOption).filter(_ > 0).getOrElse(550.0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // deployment config: SQL functions + PG operator parser + topk
-      // rule/strategy ride the extension, as they would on a cluster
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata timestamps are written tz-naive (timestamp[us], not UTC-
-      // adjusted); read them as LTZ under the UTC session zone, as every
-      // operator and oracle expects, instead of Spark 4's NTZ inference
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the sf tables are single smallish parquet files; default 128MB
-      // maxPartitionBytes would make every scan single-threaded
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    // ERROR, not WARN: benign per-query WARNs (WindowExec single-
-    // partition notes from small literal frames etc.) flooded the
-    // driver's bounded output-capture window in r11.
-    spark.sparkContext.setLogLevel("ERROR")
-    Sessions.initCheckpoints(spark)
+    val spark = Sessions.local(cpus)
 
     // JVM/codegen warmup on the smallest sf
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -29,19 +28,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <query>...")
     val sfDir = args(0); val outDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Sessions.initCheckpoints(spark)
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
 
     val jobs = new AtomicInteger(0)

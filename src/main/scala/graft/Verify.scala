@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,7 @@ object Verify {
     // optional extra args: run only these query names (dev iteration)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // deployment config: SQL functions + PG operator parser + topk
-      // rule/strategy ride the extension, as they would on a cluster
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata timestamps are written tz-naive (timestamp[us], not UTC-
-      // adjusted); read them as LTZ under the UTC session zone, as every
-      // operator and oracle expects, instead of Spark 4's NTZ inference
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.initCheckpoints(spark)
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // filtered runs must not leave stale parquet from earlier full runs:
     // check_oracle.py compares EVERY subdir, so a leftover dir would
@@ -35,13 +18,7 @@ object Verify {
       val keep = only + "oracle_sql.json"
       Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
         .filter(f => !keep(f.getName))
-        .foreach { f =>
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete()
-          }
-          rm(f)
-        }
+        .foreach(Sessions.rmTree)
     }
     // the partsupp-dependent TPC-H keys run only when the driver data
     // actually ships a partsupp table (today it doesn't — they gate at

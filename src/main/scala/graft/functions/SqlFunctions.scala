@@ -1,15 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /**
- * SQL-name registration for the vector kernel, mirroring the reference's
- * SQL surface (contrib/datavec/sql/datavec--0.7.2.sql): after
- * `SqlFunctions.register(spark)`, `spark.sql` queries can call
- * l2_distance, cosine_distance, inner_product, l1_distance,
+ * SQL-name builders for the vector kernel, mirroring the reference's
+ * SQL surface (contrib/datavec/sql/datavec--0.7.2.sql): in a session
+ * with graft installed (`graft.GraftExtensions`), `spark.sql` queries
+ * can call l2_distance, cosine_distance, inner_product, l1_distance,
  * vector_norm, l2_normalize, binary_quantize, hamming_distance,
  * jaccard_distance, vector_dims, simhash64, rolling_hash.
  */
@@ -343,17 +341,4 @@ object SqlFunctions {
     * and [[SqlContrib]] (jsonb/hstore/intarray/earthdistance). */
   def allBuilders: Map[String, Seq[Expression] => Expression] =
     all ++ SqlTextSearch.all ++ SqlContrib.all ++ PgOps.all
-
-  /** Register every kernel function as a SQL temp function (the
-    * notebook/test path; GraftExtensions injects the same surface at
-    * session build time), plus the FROM-clause table functions. */
-  def register(spark: SparkSession): Unit = {
-    allBuilders.foreach {
-      case (name, builder) => Bridge.registerFunction(spark, name, builder)
-    }
-    SqlTableFunctions.all.foreach {
-      case (name, builder) =>
-        Bridge.registerTableFunction(spark, name, builder)
-    }
-  }
 }

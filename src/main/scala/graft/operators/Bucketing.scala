@@ -17,13 +17,7 @@ object Bucketing {
     // DROP on a vanished catalog entry leaves the directory behind —
     // clear it so CTAS doesn't refuse the non-empty location
     val dir = new java.io.File(tablePath(df.sparkSession, table))
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
+    if (dir.exists()) graft.Sessions.rmTree(dir)
     df.write
       .bucketBy(buckets, key)
       .sortBy(key)

@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
  * checkpoint filesystem, so a lost executor recomputes from the last
  * round's files instead of unrecoverably losing executor-resident
  * blocks. Without one it falls back to localCheckpoint, which is
- * correct but executor-resident — acceptable only in local mode. The
- * graft session mains (Verify/Bench/TimeQuery) and the test fixture
- * all set a checkpoint dir, so every gated run exercises the reliable
- * path.
+ * correct but executor-resident — acceptable only in local mode.
+ * `Sessions.local` (the Verify/Bench/PlanDump mains and the test
+ * fixture) sets a checkpoint dir, so every gated run exercises the
+ * reliable path.
  */
 object Iterate {
 

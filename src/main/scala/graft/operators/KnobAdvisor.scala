@@ -53,23 +53,23 @@ object KnobAdvisor {
     case other => 16 // conservative default for nested/complex
   }
 
-  /** The (n_rows, var_bytes) 1-row aggregate for a table — unioned
-    * with the other tables' so the whole workload profile is ONE
-    * Spark action ([[recommend]]); the fixed-width arithmetic stays
-    * driver-side. */
-  private def statAgg(name: String, df: DataFrame): DataFrame = {
+  /** The (n_rows, var_bytes) 1-row aggregate for a table, tagged with
+    * its position — unioned with the other tables' so the whole
+    * workload profile is ONE Spark action ([[recommend]]); the
+    * fixed-width arithmetic stays driver-side. */
+  private def statAgg(pos: Int, df: DataFrame): DataFrame = {
     val strCols = df.schema.fields.filter(f =>
       f.dataType == StringType || f.dataType == BinaryType)
     val varBytes = strCols.map(f => sum(length(col(f.name)).cast("long")))
       .reduceOption(_ + _).getOrElse(lit(0L))
     df.agg(count(lit(1)).as("a"), coalesce(varBytes, lit(0L)).as("b"))
-      .select(lit(name).as("t"), col("a"), col("b"), lit(0L).as("c"))
+      .select(lit(pos).as("t"), col("a"), col("b"), lit(0L).as("c"))
   }
 
   /** (n_rows, est_bytes) in one map-side-combined aggregate. */
   def tableStats(df: DataFrame): (Long, Long) = {
     val fixed = df.schema.fields.map(f => fixedWidth(f.dataType).toLong).sum
-    val row = statAgg("t", df).collect()(0)
+    val row = statAgg(0, df).collect()(0)
     val n = row.getLong(1)
     (n, n * fixed + row.getLong(2))
   }
@@ -91,17 +91,19 @@ object KnobAdvisor {
     // single job (their branches run concurrently) instead of one
     // scheduling round-trip per table (measured 16 construction jobs
     // for 4 tables + probe; now 1). Same numbers, same knob rows.
+    // Rows are keyed by table position (the skew probe is -1), so
+    // repeated table names never collapse into one stats row.
     val skewAgg = skewDf.groupBy(col(skewKey)).agg(count(lit(1)).as("c"))
       .agg(max(col("c")).as("a"), count(lit(1)).as("b"),
         sum(col("c")).as("c"))
-      .select(lit("__skew__").as("t"), col("a"), col("b"), col("c"))
-    val profile = (tables.map { case (name, df) => statAgg(name, df) } :+
+      .select(lit(-1).as("t"), col("a"), col("b"), col("c"))
+    val profile = (tables.zipWithIndex.map { case ((_, df), i) => statAgg(i, df) } :+
       skewAgg).reduce(_ unionByName _).collect()
-    val byName = profile.map(r => r.getString(0) ->
+    val byPos = profile.map(r => r.getInt(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val stats = tables.map { case (name, df) =>
+    val stats = tables.zipWithIndex.map { case ((name, df), i) =>
       val fixed = df.schema.fields.map(f => fixedWidth(f.dataType).toLong).sum
-      val (n, v, _) = byName(name)
+      val (n, v, _) = byPos(i)
       (name, n, n * fixed + v)
     }
     val totalBytes = stats.map(_._3).sum
@@ -110,7 +112,7 @@ object KnobAdvisor {
       ceilDiv(totalBytes, TargetPartitionBytes))
     val mpb = math.min(TargetPartitionBytes,
       math.max(MinPartitionBytes, ceilDiv(maxBytes, cores.toLong)))
-    val (mx, k, tot) = byName("__skew__")
+    val (mx, k, tot) = byPos(-1)
     val ratio = mx * k * 100L / tot
     val salt = if (ratio > SkewRatioX100Threshold) ceilDiv(ratio, 100L)
       else 1L

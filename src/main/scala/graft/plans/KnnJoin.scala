@@ -3,7 +3,7 @@ package graft.plans
 import graft.functions.{TopKPairsBuffer, VectorKernel, VectorMetrics}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -215,14 +215,6 @@ object KnnJoin {
   /** The planning strategy, for SparkSessionExtensions injection. */
   def strategy: SparkStrategy = KnnJoinStrategy
 
-  /** Idempotently register the planning strategy on this session. */
-  def register(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    val cur = exp.extraStrategies
-    if (!cur.exists(_ eq KnnJoinStrategy))
-      exp.extraStrategies = cur :+ KnnJoinStrategy
-  }
-
   /**
    * Per-partition top-k (qid, nid, dist) rows of `corpus` (nid: long,
    * v: array<float>) for each row of `queries` (qid, qv: array<float>);
@@ -232,7 +224,7 @@ object KnnJoin {
   def pairs(corpus: DataFrame, queries: DataFrame, k: Int,
       metric: String): DataFrame = {
     val spark = corpus.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     Bridge.ofRows(spark, KnnJoinPlan(Bridge.logicalPlan(corpus),
       Bridge.logicalPlan(queries), k, metric,
       AttributeReference("dist", DoubleType, nullable = false)()))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -64,15 +63,5 @@ object RewriteWindowTopK extends Rule[LogicalPlan] {
         Project(projList, TopKPerKeyPlan(child, keys, so, k))
       }
       rewritten.getOrElse(p)
-  }
-}
-
-object GraftOptimizations {
-  /** Idempotently enable graft optimizer rules + strategies on a session. */
-  def register(spark: SparkSession): Unit = {
-    TopKPerKey.register(spark)
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.exists(_ eq RewriteWindowTopK))
-      exp.extraOptimizations = exp.extraOptimizations :+ RewriteWindowTopK
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -115,14 +115,6 @@ object TopKPerKey {
   /** The planning strategy, for SparkSessionExtensions injection. */
   def strategy: SparkStrategy = TopKStrategy
 
-  /** Idempotently register the planning strategy on this session. */
-  def register(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    val cur = exp.extraStrategies
-    if (!cur.exists(_ eq TopKStrategy))
-      exp.extraStrategies = cur :+ TopKStrategy
-  }
-
   /**
    * Top-k rows per key group, ordered by `orderCol` (asc unless `desc`).
    * Ties are unspecified — pass a compound numeric order (e.g. value *
@@ -131,7 +123,7 @@ object TopKPerKey {
   def perKey(df: DataFrame, keyCols: Seq[String], orderCol: String, k: Int,
       desc: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val lp = Bridge.logicalPlan(df)
     val attrs = keyCols.map(c => lp.output.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(s"no column $c")))

@@ -39,12 +39,7 @@ object Gate {
   def scratchDir(name: String): java.io.File = {
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
       s"$name-${ProcessHandle.current().pid()}")
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-      f.delete(); ()
-    }
-    if (dir.exists()) wipe(dir)
+    if (dir.exists()) graft.Sessions.rmTree(dir)
     dir
   }
 }

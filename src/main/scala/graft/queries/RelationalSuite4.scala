@@ -554,7 +554,7 @@ object RelationalSuite4 {
     // (jsonb_ops/hstore_ops/intarray_ops); the oracle recomputes every
     // column with those gates' established closed forms ----
     "sql_contrib" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       Tables(s, dir, "orders").createOrReplaceTempView("orders_sqlcontrib")
       s.sql(
         """WITH d AS (SELECT o_orderkey,

@@ -282,7 +282,7 @@ object RelationalSuite5 {
     // with the same inclusive bounds, and normal_rand's oracle is the
     // C90 shared formula text ----
     "sql_series" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       s.sql(
         """SELECT s.generate_series AS n, r.val_micro
           |FROM generate_series(1, 500) s
@@ -433,7 +433,7 @@ object RelationalSuite5 {
     // nothing per row). The oracle recomputes every column closed-form
     // from the planted shapes ----
     "sql_pg_ops" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       // spread (r19): 26 per-row jsonb/hstore/intarray kernels on a
       // single-row-group file serialized ~1.1 s of map work behind one
       // task (Tables.spread rationale); the barrier repays 10x here
@@ -482,7 +482,7 @@ object RelationalSuite5 {
     // map-only per-row kernels over the planted doc; oracle
     // closed-form ----
     "sql_jsonb_surface" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       Tables.spread(s, dir, "orders").createOrReplaceTempView("orders_jsurf")
       s.sql(graft.plans.PgSqlRewrite.rewrite(
         """WITH d AS (SELECT o_orderkey AS k,
@@ -510,7 +510,7 @@ object RelationalSuite5 {
     // to the A1 distance kernels (codegen'd, map-only) and the topk
     // is the same bounded heap every other KNN gate runs ----
     "sql_pg_vector" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       Tables(s, dir, "embeddings").createOrReplaceTempView("emb_pgops")
       s.sql(graft.plans.PgSqlRewrite.rewrite(
         """WITH q AS (SELECT embedding AS qv FROM emb_pgops WHERE vec_id = 0)

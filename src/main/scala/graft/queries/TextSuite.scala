@@ -490,7 +490,7 @@ object TextSuite {
     // established closed forms (stem CASE map, shared rank table,
     // cover-density nanos, single-atom headline window arithmetic).
     "sql_fts" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       Tables.spread(s, dir, "documents").createOrReplaceTempView("docs_sqlfts")
       s.sql(
         """SELECT doc_id,

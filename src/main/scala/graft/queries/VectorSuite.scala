@@ -206,7 +206,7 @@ object VectorSuite {
     "sql_vector" -> ((s, dir) => {
       // the registered SQL surface: l2_distance/vector_norm callable from
       // spark.sql, like the reference's SQL functions.
-      graft.functions.SqlFunctions.register(s)
+      graft.GraftExtensions.install(s)
       Tables(s, dir, "embeddings").createOrReplaceTempView("emb_sqlq")
       s.sql(
         """SELECT e.vec_id, round(l2_distance(e.embedding, q.embedding), 6) AS d,

@@ -86,7 +86,6 @@ class CipherSpec extends SparkSpec {
   }
 
   test("SQL surface: encrypt/decrypt registered and round-trip in spark.sql") {
-    graft.functions.SqlFunctions.register(spark)
     val r = spark.sql(
       """SELECT CAST(decrypt(encrypt('hello graft', 'k3y', 'aes'),
         |  'k3y', 'aes') AS STRING) AS rt""".stripMargin).collect()(0).getString(0)

@@ -9,6 +9,10 @@ class EntrySpec extends SparkSpec {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
     assert(SparkEntry.queries.size >= 95)
+    // a name two suites define is an error, not a silent last-one-wins
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.union(Seq(Map("a" -> 1, "b" -> 2), Map("c" -> 3), Map("b" -> 4))))
+    assert(e.getMessage.contains("two suites: b"), e.getMessage)
   }
 
   test("GraftExtensions wires the topk rewrite rule and strategy") {
@@ -35,8 +39,26 @@ class EntrySpec extends SparkSpec {
       tfNames.contains("normal_rand"))
   }
 
+  test("GraftExtensions.install is idempotent on an existing session") {
+    val s = spark.newSession()
+    GraftExtensions.install(s)
+    GraftExtensions.install(s)
+    // the extension's injections live in the session state builder, so
+    // the experimental lists hold only what install added
+    val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    assert(exp.extraOptimizations.count(_ eq graft.plans.RewriteWindowTopK) == 1)
+    assert(exp.extraStrategies.count(_ eq graft.plans.TopKPerKey.strategy) == 1)
+    assert(exp.extraStrategies.count(_ eq graft.plans.KnnJoin.strategy) == 1)
+    val fnCounts = s.catalog.listFunctions().collect().toSeq
+      .groupBy(_.name).view.mapValues(_.size).toMap
+    val want = graft.functions.SqlFunctions.allBuilders.keySet + "generate_series"
+    assert(want.forall(n => fnCounts.get(n).contains(1)),
+      want.filterNot(n => fnCounts.get(n).contains(1)))
+    assert(s.sql("SELECT l2_distance(array(0F, 0F), array(3F, 4F))").head().getDouble(0) == 5.0)
+    assert(s.sql("SELECT * FROM generate_series(1, 3)").count() == 3)
+  }
+
   test("generate_series: PG inclusive bounds, signed step, Range plan") {
-    graft.functions.SqlFunctions.register(spark)
     assert(spark.sql("SELECT * FROM generate_series(1, 5)")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
     assert(spark.sql("SELECT * FROM generate_series(5, 1, -2)")

@@ -86,7 +86,7 @@ class IndexAdvisorSpec extends SparkSpec {
           .contains("seg"),
         s"no partition filter on seg in plan:\n$planStr")
     } finally {
-      rmTree(scratch)
+      Sessions.rmTree(scratch)
     }
   }
 
@@ -118,7 +118,7 @@ class IndexAdvisorSpec extends SparkSpec {
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_bucket_spec_l")
       spark.sql("DROP TABLE IF EXISTS graft_bucket_spec_r")
-      rmTree(scratch)
+      Sessions.rmTree(scratch)
     }
   }
 }

@@ -168,7 +168,7 @@ class KnnJoinSpec extends SparkSpec {
       assert(m("pairs") == 3 * emb.count())
       assert(m("pairs") == m("pairs_pruned") + m("pairs_rounded"))
       assert(m("pairs_pruned") > 0, s"no candidate pruned: $m")
-    } finally rmTree(dir)
+    } finally Sessions.rmTree(dir)
   }
 
   test("query columns named qv/qid and a corpus with its own qid column") {

@@ -44,4 +44,21 @@ class KnobAdvisorSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rec("skew.salt.k") == 1L)
   }
+
+  test("profile rows are keyed by table position, not by table name") {
+    // two distinct tables under one name, and a table named like the
+    // skew probe's row: each keeps its own stats
+    val big = spark.range(1400000).toDF("k") // 11.2MB: past the broadcast budget
+    val small = Seq(1L, 2L).toDF("k")
+    val hot = (Seq.fill(90)(7) ++ (1 to 10)).toDF("k")
+    val rows = KnobAdvisor.recommend(spark,
+      Seq("t" -> big, "t" -> small, "__skew__" -> big), ("h", hot, "k"), cores = 1)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rows.filter(_._1.startsWith("broadcast.")) ==
+      Seq("broadcast.t" -> 0L, "broadcast.t" -> 1L, "broadcast.__skew__" -> 0L))
+    // the largest table sets the split size (one core), and the skew
+    // probe still reads its own row
+    assert(rows.toMap.apply("spark.sql.files.maxPartitionBytes") == 11200000L)
+    assert(rows.toMap.apply("aqe.skew_ratio_x100.k") == 910L)
+  }
 }

@@ -28,7 +28,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("SQL surface: zvalue() matches the Column API; bits must be literal") {
-    graft.functions.SqlFunctions.register(spark)
     val r = spark.sql("SELECT zvalue(5, 3, 4) AS z").head().getLong(0)
     assert(r == refZ(5L, 3L, 4))
     val e = intercept[Exception] {

@@ -55,7 +55,6 @@ class MaskingSpec extends SparkSpec {
   }
 
   test("SQL surface: registered masking/unaccent/hmac/hilbert match the APIs") {
-    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       ("4096-1234-5678-9012", "alice@mail.example.org", "Pay 12 to +49"),

@@ -58,6 +58,29 @@ class PgOperatorSpec extends SparkSpec {
     assert(r.getDouble(1) == e.getDouble(1))
   }
 
+  test("ORDER BY <=> / <-> ranks on the raw distance inside a rounding tie") {
+    // PG semantics: selecting round(d, 6) but ordering by the operator
+    // ranks on the RAW distance. Rows 1 and 2 round to the same six
+    // places; row 2 is nearer, so it comes first, although a
+    // (rounded distance, vec_id) order would put it second.
+    def ranked(op: String, q: String, rows: Seq[(Long, Array[Float])]) = {
+      rows.toDF("vec_id", "embedding").createOrReplaceTempView("pgop_tie")
+      spark.sql(
+        s"""SELECT vec_id, round(embedding $op '$q'::vector, 6),
+           |       embedding $op '$q'::vector
+           |FROM pgop_tie ORDER BY embedding $op '$q'::vector, vec_id LIMIT 2""".stripMargin)
+        .as[(Long, Double, Double)].collect().toSeq
+    }
+    for (r <- Seq(
+        ranked("<=>", "[1,0]", Seq(1L -> Array(1f, 0.850002f),
+          2L -> Array(1f, 0.8500001f), 3L -> Array(1f, 0.95f))),
+        ranked("<->", "[0,0]", Seq(1L -> Array(0.2372612f, 0f),
+          2L -> Array(0.2372611f, 0f), 3L -> Array(0.3f, 0f))))) {
+      assert(r(0)._2 == r(1)._2 && r(0)._3 < r(1)._3, r) // a real tie
+      assert(r.map(_._1) == Seq(2L, 1L), r)
+    }
+  }
+
   test("operator KNN keeps the shuffle-free TakeOrderedAndProject plan") {
     val df = spark.sql(
       s"""SELECT vec_id FROM pgop_emb

@@ -406,13 +406,13 @@ class PgStatementsSpec extends SparkSpec {
     // and COPY FROM appends onto the chained state without blowing up
     val dirF = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-stmt-chain-${ProcessHandle.current().pid()}")
-    rmTree(dirF); dirF.mkdirs()
+    Sessions.rmTree(dirF); dirF.mkdirs()
     try {
       val pth = new java.io.File(dirF, "c").getPath
       spark.sql(s"COPY (SELECT * FROM stmt_chain) TO '$pth' (FORMAT csv, HEADER)")
       spark.sql(s"COPY stmt_chain FROM '$pth' (FORMAT csv, HEADER)")
       assert(spark.table("stmt_chain").count() == 2)
-    } finally rmTree(dirF)
+    } finally Sessions.rmTree(dirF)
   }
 
   test("TRUNCATE TABLE empties the view, keeps the schema, and a " +
@@ -748,7 +748,7 @@ class PgStatementsSpec extends SparkSpec {
   test("COPY TO / COPY FROM round-trips through file_fdw options") {
     val dirF = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-stmt-copy-${ProcessHandle.current().pid()}")
-    rmTree(dirF); dirF.mkdirs()
+    Sessions.rmTree(dirF); dirF.mkdirs()
     val p = new java.io.File(dirF, "out").getPath
     try {
       Seq((1L, "ab,c", 1.5), (2L, null.asInstanceOf[String], -2.25),
@@ -781,13 +781,13 @@ class PgStatementsSpec extends SparkSpec {
       val e = intercept[Exception](spark.sql(
         s"COPY stmt_cp_tgt FROM '$p' WITH (COMPRESSION gzip)"))
       assert(e.getMessage.contains("COPY option"))
-    } finally rmTree(dirF)
+    } finally Sessions.rmTree(dirF)
   }
 
   test("COPY TEXT format: tab delimiter, backslash-N nulls, no quoting") {
     val dirF = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-stmt-copytext-${ProcessHandle.current().pid()}")
-    rmTree(dirF); dirF.mkdirs()
+    Sessions.rmTree(dirF); dirF.mkdirs()
     val p = new java.io.File(dirF, "t").getPath
     try {
       Seq((1L, "plain"), (2L, null.asInstanceOf[String]))
@@ -806,7 +806,7 @@ class PgStatementsSpec extends SparkSpec {
         scala.io.Source.fromFile(f).getLines().toList).sorted
       assert(lines.exists(_ == "1\tplain"))
       assert(lines.exists(_ == "2\t\\N"))
-    } finally rmTree(dirF)
+    } finally Sessions.rmTree(dirF)
   }
 
   test("INCREMENTAL matview with several sum columns and composite keys") {
@@ -842,7 +842,7 @@ class PgStatementsSpec extends SparkSpec {
         s"""SELECT k, v FROM dblink('$url', 'SELECT "k", "v" FROM T WHERE "k" > 1')
            |ORDER BY k""".stripMargin).as[(Long, String)].collect().toSeq
       assert(r == Seq((2L, "y"), (3L, "z")))
-    } finally rmTree(root)
+    } finally Sessions.rmTree(root)
   }
 
   // ---- CREATE INDEX USING ivfflat/hnsw + the KNN access path ----

@@ -141,7 +141,7 @@ class SeasonalSpec extends SparkSpec {
       assert(twoStep.count(_._1 == "kC") === 6)
       assert(twoStep.filter(_._1 == "kC").forall(_._5 == null))
     } finally {
-      rmTree(dir)
+      Sessions.rmTree(dir)
     }
   }
 

@@ -6,27 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all graft specs. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // deployment config: the whole SQL surface (functions, PG
-      // operator parser, topk rule/strategy) rides the extension
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata timestamps are written tz-naive (timestamp[us], not UTC-
-      // adjusted); read them as LTZ under the UTC session zone, as every
-      // operator and oracle expects, instead of Spark 4's NTZ inference
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Sessions.initCheckpoints(s)
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("4")
   val sfDir = "/root/testdata/sf0.001"
 
   /** Driver generations have written events.ts both as timestamp[ns]
@@ -43,11 +23,4 @@ object SparkTestSession {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
   def sfDir: String = SparkTestSession.sfDir
-
-  /** Recursive scratch-dir delete for finally blocks — one shared
-    * helper so the delete semantics can't drift between specs. */
-  def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
 }

@@ -11,8 +11,6 @@ import org.apache.spark.sql.functions._
 class SqlContribSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.SqlFunctions.register(spark)
-
   private def one(sql: String): org.apache.spark.sql.Row =
     spark.sql(sql).collect()(0)
 

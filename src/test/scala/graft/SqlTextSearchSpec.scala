@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
 class SqlTextSearchSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.SqlFunctions.register(spark)
-
   private lazy val docs = {
     val d = spark.read.parquet(s"${SparkTestSession.sfDir}/documents.parquet")
     d.createOrReplaceTempView("sqlts_docs")

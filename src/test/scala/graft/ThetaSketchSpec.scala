@@ -53,7 +53,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("SQL surface: theta_sketch/theta_estimate/theta_intersection register") {
-    graft.functions.SqlFunctions.register(spark)
     spark.range(0, 300).createOrReplaceTempView("theta_sql_a")
     spark.range(100, 500).createOrReplaceTempView("theta_sql_b")
     val row = spark.sql(

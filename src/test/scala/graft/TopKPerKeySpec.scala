@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.SqlFunctions
 import graft.plans.TopKPerKey
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,7 +33,6 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites window row_number <= k into TopKPerKey") {
-    graft.plans.GraftOptimizations.register(spark)
     val w = Window.partitionBy($"o_custkey").orderBy($"o_totalprice".desc)
     val q = orders.withColumn("rk", row_number().over(w))
       .filter($"rk" <= 3).drop("rk")
@@ -64,7 +62,6 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("SQL-registered vector functions work in spark.sql") {
-    SqlFunctions.register(spark)
     Tables(spark, sfDir, "embeddings").createOrReplaceTempView("emb_sql")
     val r = spark.sql(
       """SELECT e.vec_id,

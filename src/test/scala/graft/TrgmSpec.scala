@@ -56,7 +56,6 @@ class TrgmSpec extends SparkSpec {
   }
 
   test("SQL surface: similarity()/show_trgm() match the Column API") {
-    graft.functions.SqlFunctions.register(spark)
     val r = spark.sql(
       "SELECT similarity('word', 'two words') AS s, show_trgm('word') AS t")
       .head()

@@ -223,7 +223,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("vector I/O + sparse norms callable from SQL") {
-    graft.functions.SqlFunctions.register(spark)
     val r = spark.sql(
       """SELECT vector_to_string(parse_vector('[3,4]')) AS s,
         |  sparsevec_l2_norm(array(3.0F, 4.0F)) AS n,
@@ -232,7 +231,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("halfvec/sparsevec distances + dims enforcement callable from SQL") {
-    graft.functions.SqlFunctions.register(spark)
     val r = spark.sql(
       """SELECT halfvec_l2_squared_distance(array(1.0F, 2.0F), array(4.0F, 6.0F)) AS h,
         |  sparsevec_l2_squared_distance(array(0, 2), array(1.0F, 2.0F),
