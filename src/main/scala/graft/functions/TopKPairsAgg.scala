@@ -75,6 +75,29 @@ final class TopKPairsBuffer(val k: Int) {
     })
     out
   }
+
+  /** k, size, then each entry's id and dist; a dist keeps its raw bits
+    * (NaN sign and payload), which Java and Kryo serialization of a
+    * double would canonicalize. */
+  def toBytes: Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 + 16 * size)
+    bb.putInt(k).putInt(size)
+    var i = 0
+    while (i < size) { bb.putLong(ids(i)).putDouble(dists(i)); i += 1 }
+    bb.array()
+  }
+}
+
+object TopKPairsBuffer {
+  /** The buffer [[TopKPairsBuffer.toBytes]] wrote, entries re-inserted. */
+  def fromBytes(bytes: Array[Byte]): TopKPairsBuffer = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val b = new TopKPairsBuffer(bb.getInt())
+    val n = bb.getInt()
+    var i = 0
+    while (i < n) { b.insert(bb.getLong(), bb.getDouble()); i += 1 }
+    b
+  }
 }
 
 /**
@@ -120,27 +143,10 @@ case class TopKPairsAgg(left: Expression, right: Expression, k: Int,
       new GenericInternalRow(Array[Any](id, d))
     })
 
-  override def serialize(b: TopKPairsBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + 16 * b.size)
-    bb.putInt(b.k).putInt(b.size)
-    var i = 0
-    while (i < b.size) { bb.putLong(b.ids(i)).putDouble(b.dists(i)); i += 1 }
-    bb.array()
-  }
+  override def serialize(b: TopKPairsBuffer): Array[Byte] = b.toBytes
 
-  override def deserialize(bytes: Array[Byte]): TopKPairsBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val b = new TopKPairsBuffer(bb.getInt())
-    val n = bb.getInt()
-    // entries were heap-ordered arrays; re-inserting preserves the set
-    var i = 0
-    while (i < n) {
-      val id = bb.getLong(); val d = bb.getDouble()
-      b.insert(id, d)
-      i += 1
-    }
-    b
-  }
+  override def deserialize(bytes: Array[Byte]): TopKPairsBuffer =
+    TopKPairsBuffer.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): TopKPairsAgg =
     copy(mutableAggBufferOffset = o)

@@ -2,7 +2,8 @@ package graft.functions
 
 /**
  * The scalar distance kernel over fp32 vectors held in `float[]`, for
- * task-side loops (the fused KNN join, IVF probe ranking, HNSW beams).
+ * task-side loops (the fused KNN join, IVF probe ranking, HNSW beams,
+ * k-means and PQ encoding).
  *
  * Every element pair is widened to double and accumulated in index
  * order: `acc += ((double) a[i] - (double) b[i])²`. That is the
@@ -22,6 +23,15 @@ object VectorKernel {
   /** Σ |(double) a[i] − (double) b[i]|. */
   def l1(a: Array[Float], b: Array[Float]): Double =
     l1Bounded(a, b, Double.PositiveInfinity)
+
+  /** Σ ((double) a[off + j] − c[j])² over j < c.length, in j order: a
+    * float vector, or the sub-vector at `off`, against a double centre
+    * (k-means centres, PQ codewords). */
+  def l2sqAt(a: Array[Float], off: Int, c: Array[Double]): Double = {
+    var acc = 0.0; var j = 0
+    while (j < c.length) { val d = a(off + j).toDouble - c(j); acc += d * d; j += 1 }
+    acc
+  }
 
   /** Σ (double) a[i] · (double) b[i]. */
   def dot(a: Array[Float], b: Array[Float]): Double = {

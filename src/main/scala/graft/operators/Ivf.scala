@@ -419,11 +419,6 @@ private[graft] object LocalKMeans {
     val k = math.min(k0, n)
     val dim = pts(0).length
     val rnd = new scala.util.Random(seed)
-    def l2sq(a: Array[Float], c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val d = a(i) - c(i); s += d * d; i += 1 }
-      s
-    }
     val centers = Array.ofDim[Double](k, dim)
     def setCenter(c: Int, p: Array[Float]): Unit = {
       var j = 0; while (j < dim) { centers(c)(j) = p(j); j += 1 }
@@ -435,7 +430,7 @@ private[graft] object LocalKMeans {
     while (ci < k) {
       var i = 0; var tot = 0.0
       while (i < n) {
-        val d = l2sq(pts(i), centers(ci - 1))
+        val d = VectorKernel.l2sqAt(pts(i), 0, centers(ci - 1))
         if (d < minD(i)) minD(i) = d
         tot += minD(i); i += 1
       }
@@ -466,7 +461,7 @@ private[graft] object LocalKMeans {
       while (i < n) {
         var best = 0; var bd = Double.MaxValue; var c = 0
         while (c < k) {
-          val d = l2sq(pts(i), centers(c))
+          val d = VectorKernel.l2sqAt(pts(i), 0, centers(c))
           if (d < bd) { bd = d; best = c }
           c += 1
         }
@@ -490,7 +485,7 @@ private[graft] object LocalKMeans {
           var far = -1; var fd = -1.0; var i2 = 0
           while (i2 < n) {
             if (!used.contains(i2)) {
-              val d = l2sq(pts(i2), centers(assign(i2)))
+              val d = VectorKernel.l2sqAt(pts(i2), 0, centers(assign(i2)))
               if (d > fd) { fd = d; far = i2 }
             }
             i2 += 1
@@ -512,7 +507,7 @@ private[graft] object LocalKMeans {
     while (i3 < n) {
       var bd = Double.MaxValue; var c = 0
       while (c < k) {
-        val d = l2sq(pts(i3), centers(c)); if (d < bd) bd = d; c += 1
+        val d = VectorKernel.l2sqAt(pts(i3), 0, centers(c)); if (d < bd) bd = d; c += 1
       }
       wcss += bd; i3 += 1
     }

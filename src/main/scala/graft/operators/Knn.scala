@@ -13,12 +13,16 @@ import org.apache.spark.sql.graft.Bridge
  * Scale design (SURVEY §5):
  *  - single-query top-k compiles to TakeOrderedAndProject: per-partition
  *    O(k) heap, driver merge of #partitions × k rows — no shuffle, no sort.
- *  - knn join is one fused scan ([[graft.plans.KnnJoinExec]]): the query
- *    side is broadcast, each corpus task scores every row against every
- *    query into one bounded heap per query, abandoning a candidate once
- *    its partial distance passes the heap's k-th best, and emits at most
- *    k rows per (query, partition). A top-k aggregate per query id merges
- *    them, so the shuffle never carries the corpus.
+ *  - knn join is one fused operator ([[graft.plans.KnnJoinExec]]): the
+ *    query rows are read on the driver and broadcast, each corpus task
+ *    scores every row against every query into one bounded heap per
+ *    query, abandoning a candidate once its partial distance passes the
+ *    heap's k-th best, and returns at most k entries per query. The
+ *    driver merges those heaps per query id, as TakeOrderedAndProject
+ *    merges its per-partition heaps: a collect is one job, with no
+ *    shuffle and no aggregate. Under a join, union or sort the heaps
+ *    are merged in one task instead, after a shuffle of k entries per
+ *    query per corpus partition.
  */
 object Knn {
 
@@ -66,16 +70,15 @@ object Knn {
    * dist), dist rounded to 6 places, ties broken on nid — the values of
    * `round(dist(vec, qv), 6)` ranked per query. Vectors are read as
    * array<float>; rows with a null id or vector and queries with a null
-   * vector are skipped. `queries` must be small enough to broadcast (the
-   * common shape: |Q| ≪ |corpus|).
+   * vector are skipped; query rows sharing a qid share one top k.
+   * `queries` must be small enough to collect and broadcast (the common
+   * shape: |Q| ≪ |corpus|).
    */
   def knnJoin(queries: DataFrame, qVecCol: String, qIdCol: String,
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
       metric: String = VectorMetrics.L2): DataFrame = {
     val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).cast("array<float>").as("qv"))
     val c = corpus.select(col(idCol).cast("long").as("nid"), col(vecCol).cast("array<float>").as("v"))
-    explodeTopK(KnnJoin.pairs(c, q, k, metric)
-      .groupBy(col("qid"))
-      .agg(topKPairs(col("nid"), col("dist"), k).as("nn")))
+    KnnJoin.join(c, q, k, metric)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorKernel
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
@@ -36,23 +37,19 @@ object Pq {
     def k: Int = codebooks(0).length
     def subDim: Int = codebooks(0)(0).length
 
+    /** The codebooks widened to double (exactly), for the kernel. */
+    @transient private lazy val centres = codebooks.map(_.map(_.map(_.toDouble)))
+
     private[graft] def encodeOne(v: Array[Float]): Array[Byte] = {
       val code = new Array[Byte](m)
       var s = 0
       while (s < m) {
-        val cb = codebooks(s)
+        val cb = centres(s)
         var best = 0
         var bestD = Double.MaxValue
         var c = 0
         while (c < cb.length) {
-          var d = 0.0
-          var j = 0
-          val cent = cb(c)
-          while (j < cent.length) {
-            val diff = v(s * subDim + j).toDouble - cent(j)
-            d += diff * diff
-            j += 1
-          }
+          val d = VectorKernel.l2sqAt(v, s * subDim, cb(c))
           if (d < bestD) { bestD = d; best = c }
           c += 1
         }
@@ -64,19 +61,7 @@ object Pq {
 
     /** ADC lookup table for one query: table(s)(c) = l2sq(q_sub, cent). */
     private[graft] def adcTable(q: Array[Float]): Array[Array[Double]] =
-      Array.tabulate(m) { s =>
-        Array.tabulate(k) { c =>
-          var d = 0.0
-          var j = 0
-          val cent = codebooks(s)(c)
-          while (j < cent.length) {
-            val diff = q(s * subDim + j).toDouble - cent(j)
-            d += diff * diff
-            j += 1
-          }
-          d
-        }
-      }
+      Array.tabulate(m, k)((s, c) => VectorKernel.l2sqAt(q, s * subDim, centres(s)(c)))
   }
 
   /**

@@ -1,42 +1,51 @@
 package graft.plans
 
 import graft.functions.{TopKPairsBuffer, VectorKernel, VectorMetrics}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BoundReference, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnknownPartitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
 import scala.annotation.switch
+import scala.collection.mutable
 
 /**
  * Fused exact KNN join: every corpus row is scored against every query
  * in one pass, into one bounded heap per query, with no per-pair row,
  * expression or aggregate buffer in between (FuseME's fused
  * query×corpus operator, with the early-abandon test of progressive
- * top-k similarity search).
+ * top-k similarity search). The node also merges the heaps, so it is
+ * the whole join: one job, with no exchange and no aggregate.
  *
- * Children: `corpus` = (nid: long, v: array<float>), a Catalyst-planned
- * scan; `queries` = (qid, qv: array<float>), broadcast to every corpus
- * task. Output: (qid, nid, dist), at most k rows per query per corpus
- * partition, where dist is the metric's distance rounded like Spark's
- * `round(dist, 6)`. A downstream top-k aggregate per qid merges them.
+ * Children: `corpus`, a Catalyst-planned scan, and `queries`, read on
+ * the driver when the node executes. `reads` names the columns the node
+ * reads: (nid: long, v: array<float>) of the corpus, then (qid,
+ * qv: array<float>) of the queries; holding them keeps column pruning
+ * from dropping them. Output: (qid, rank, nid, dist), the k nearest
+ * corpus rows per qid ranked by (dist, nid), where dist is the metric's
+ * distance rounded like Spark's `round(dist, 6)`. Query rows that share
+ * a qid (null included) share one heap, as a `groupBy(qid)` would.
+ * `produced` holds the (rank, nid, dist) attributes; `newInstance`
+ * renews them, so a plan that uses one join twice (a self-join) can be
+ * deduplicated like any relation.
  */
 final case class KnnJoinPlan(corpus: LogicalPlan, queries: LogicalPlan, k: Int,
-    metric: String, dist: Attribute) extends BinaryNode {
+    metric: String, reads: Seq[Attribute], produced: Seq[Attribute]) extends BinaryNode
+    with MultiInstanceRelation {
   require(k > 0, "k must be positive")
   require(VectorMetrics.all.contains(metric), s"unknown metric $metric")
   override def left: LogicalPlan = corpus
   override def right: LogicalPlan = queries
-  override def output: Seq[Attribute] =
-    Seq(queries.output.head, corpus.output.head, dist)
-  override def producedAttributes: AttributeSet = AttributeSet(dist)
+  override def output: Seq[Attribute] = reads(2) +: produced
+  override def producedAttributes: AttributeSet = AttributeSet(produced)
+  override def newInstance(): KnnJoinPlan = copy(produced = produced.map(_.newInstance()))
   override protected def withNewChildrenInternal(l: LogicalPlan,
       r: LogicalPlan): KnnJoinPlan = copy(corpus = l, queries = r)
 }
@@ -46,20 +55,23 @@ final case class KnnJoinPlan(corpus: LogicalPlan, queries: LogicalPlan, k: Int,
  * skipped; a corpus vector whose length differs from a query's throws,
  * as `VectorDistance` does.
  *
+ * Both children keep their own partitioning, so the plan has no
+ * exchange. Each corpus task returns one heap of at most k entries per
+ * query row. `executeCollect` merges them on the driver after one job,
+ * as `TakeOrderedAndProjectExec` does; `execute` (a composed plan)
+ * moves them to one partition and merges them there.
+ *
  * Metrics: `pairs` scored, `pairs_pruned` rejected against the heap's
  * k-th best without rounding, `pairs_rounded` rounded and offered to the
  * heap (`pairs = pairs_pruned + pairs_rounded`).
  */
 final case class KnnJoinExec(corpus: SparkPlan, queries: SparkPlan, k: Int,
-    metric: String, dist: Attribute) extends BinaryExecNode {
+    metric: String, reads: Seq[Attribute], produced: Seq[Attribute]) extends BinaryExecNode {
   override def left: SparkPlan = corpus
   override def right: SparkPlan = queries
-  override def output: Seq[Attribute] =
-    Seq(queries.output.head, corpus.output.head, dist)
-  override def outputPartitioning: Partitioning =
-    UnknownPartitioning(corpus.outputPartitioning.numPartitions)
-  override def requiredChildDistribution: Seq[Distribution] =
-    UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
+  override def output: Seq[Attribute] = reads(2) +: produced
+  override def producedAttributes: AttributeSet = AttributeSet(produced)
+  override def outputPartitioning: Partitioning = SinglePartition
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
@@ -68,44 +80,78 @@ final case class KnnJoinExec(corpus: SparkPlan, queries: SparkPlan, k: Int,
     "pairs_rounded" -> SQLMetrics.createMetric(sparkContext, "pairs rounded"))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val bq: Broadcast[Array[InternalRow]] = queries.executeBroadcast[Array[InternalRow]]()
+    val (heaps, merge) = scan()
+    heaps.coalesce(1, shuffle = true).mapPartitions(merge)
+  }
+
+  override def executeCollect(): Array[InternalRow] = executeQuery {
+    val (heaps, merge) = scan()
+    val out = merge(heaps.collect().iterator).map(_.copy()).toArray
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+    out
+  }
+
+  /**
+   * The corpus scan, lazily: per corpus partition, one heap per query
+   * row, as [[TopKPairsBuffer.toBytes]]. And the merge of those heaps
+   * into output rows, one heap per distinct qid. Reads the query side
+   * (a local relation runs no job) and broadcasts its vectors.
+   */
+  private def scan(): (RDD[Array[Array[Byte]]],
+      Iterator[Array[Array[Byte]]] => Iterator[InternalRow]) = {
+    def ordinal(p: SparkPlan, a: Attribute): Int = p.output.indexWhere(_.exprId == a.exprId)
+    val Seq(nidAt, vAt) = reads.take(2).map(ordinal(corpus, _))
+    val Seq(qidAt, qvAt) = reads.drop(2).map(ordinal(queries, _))
+    val qs = queries.executeCollect()
+    val qidType = reads(2).dataType
+    val keyOf = UnsafeProjection.create(
+      Bridge.normalizeFloats(BoundReference(qidAt, qidType, nullable = true)) :: Nil)
+    val keyIds = mutable.LinkedHashMap.empty[UnsafeRow, Int]
+    val group = qs.map(q => keyIds.getOrElseUpdate(keyOf(q).copy(), keyIds.size))
+    val keys = keyIds.keys.toArray
+    val bq = sparkContext.broadcast(
+      qs.map(q => if (q.isNullAt(qvAt)) null else q.getArray(qvAt).toFloatArray()))
     val (k, metric) = (this.k, this.metric)
-    val qidType = queries.output.head.dataType
     val m = metrics
-    corpus.execute().mapPartitions { rows =>
-      val qs = bq.value
-      val scan = new FusedTopK(
-        qs.map(q => if (q.isNullAt(1)) null else q.getArray(1).toFloatArray()), k, metric)
+    val heaps = corpus.execute().mapPartitions { rows =>
+      val scan = new FusedTopK(bq.value, k, metric)
       var v = Array.emptyFloatArray
       while (rows.hasNext) {
         val row = rows.next()
-        if (!row.isNullAt(1)) {
-          val a = row.getArray(1)
+        if (!row.isNullAt(vAt)) {
+          val a = row.getArray(vAt)
           val n = a.numElements()
           if (v.length != n) v = new Array[Float](n)
           var i = 0
           while (i < n) { v(i) = a.getFloat(i); i += 1 }
           scan.checkDims(n)
-          if (!row.isNullAt(0)) scan.score(row.getLong(0), v)
+          if (!row.isNullAt(nidAt)) scan.score(row.getLong(nidAt), v)
         }
       }
       m("pairs") += scan.pairs
       m("pairs_pruned") += scan.pruned
       m("pairs_rounded") += scan.rounded
+      Iterator.single(scan.heaps.map(_.toBytes))
+    }
+    val merge = (parts: Iterator[Array[Array[Byte]]]) => {
+      val merged = Array.fill(keys.length)(new TopKPairsBuffer(k))
+      parts.foreach(hs => hs.indices.foreach(qi =>
+        merged(group(qi)).mergeFrom(TopKPairsBuffer.fromBytes(hs(qi)))))
+      val types = Array[DataType](qidType, IntegerType, LongType, DoubleType)
+      val buf = new SpecificInternalRow(types.toSeq)
+      val proj = UnsafeProjection.create(types)
       val numOut = m("numOutputRows")
-      val buf = new SpecificInternalRow(Seq[DataType](qidType, LongType, DoubleType))
-      val proj = UnsafeProjection.create(Array[DataType](qidType, LongType, DoubleType))
-      qs.indices.iterator.flatMap { qi =>
-        val h = scan.heaps(qi)
-        val q = qs(qi)
-        if (q.isNullAt(0)) buf.setNullAt(0) else buf.update(0, q.get(0, qidType))
-        Iterator.range(0, h.size).map { j =>
-          buf.setLong(1, h.ids(j)); buf.setDouble(2, h.dists(j))
+      keys.indices.iterator.flatMap { g =>
+        if (keys(g).isNullAt(0)) buf.setNullAt(0) else buf.update(0, keys(g).get(0, qidType))
+        merged(g).sorted().iterator.zipWithIndex.map { case ((nid, d), j) =>
+          buf.setInt(1, j + 1); buf.setLong(2, nid); buf.setDouble(3, d)
           numOut += 1
           proj(buf)
         }
       }
     }
+    (heaps, merge)
   }
 
   override protected def withNewChildrenInternal(l: SparkPlan,
@@ -206,8 +252,8 @@ private[plans] object FusedTopK {
 object KnnJoin {
   private object KnnJoinStrategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case KnnJoinPlan(corpus, queries, k, metric, dist) =>
-        KnnJoinExec(planLater(corpus), planLater(queries), k, metric, dist) :: Nil
+      case KnnJoinPlan(corpus, queries, k, metric, reads, produced) =>
+        KnnJoinExec(planLater(corpus), planLater(queries), k, metric, reads, produced) :: Nil
       case _ => Nil
     }
   }
@@ -216,17 +262,20 @@ object KnnJoin {
   def strategy: SparkStrategy = KnnJoinStrategy
 
   /**
-   * Per-partition top-k (qid, nid, dist) rows of `corpus` (nid: long,
-   * v: array<float>) for each row of `queries` (qid, qv: array<float>);
+   * The k nearest rows of `corpus` (nid: long, v: array<float>) for each
+   * qid of `queries` (qid, qv: array<float>), as (qid, rank, nid, dist);
    * the first two columns of each side, by position. Lazy: no job runs
    * until an action.
    */
-  def pairs(corpus: DataFrame, queries: DataFrame, k: Int,
+  def join(corpus: DataFrame, queries: DataFrame, k: Int,
       metric: String): DataFrame = {
     val spark = corpus.sparkSession
     graft.GraftExtensions.install(spark)
-    Bridge.ofRows(spark, KnnJoinPlan(Bridge.logicalPlan(corpus),
-      Bridge.logicalPlan(queries), k, metric,
-      AttributeReference("dist", DoubleType, nullable = false)()))
+    val (c, q) = (Bridge.logicalPlan(corpus), Bridge.logicalPlan(queries))
+    val produced = Seq(AttributeReference("rank", IntegerType, nullable = false)(),
+      AttributeReference("nid", LongType, nullable = false)(),
+      AttributeReference("dist", DoubleType, nullable = false)())
+    Bridge.ofRows(spark, KnnJoinPlan(c, q, k, metric,
+      c.output.take(2) ++ q.output.take(2), produced))
   }
 }

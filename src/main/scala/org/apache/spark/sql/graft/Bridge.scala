@@ -23,6 +23,11 @@ object Bridge {
   def toCatalyst(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `e` with floating-point values normalized (-0.0 to 0.0, one NaN),
+    * the key equality of `groupBy` (private[sql] NormalizeFloatingNumbers). */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** Analyzed logical plan of a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

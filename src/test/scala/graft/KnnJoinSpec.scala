@@ -171,6 +171,84 @@ class KnnJoinSpec extends SparkSpec {
     } finally Sessions.rmTree(dir)
   }
 
+  test("a collect over a local query frame runs one job and one stage, shuffling nothing") {
+    import spark.implicits._
+    val c = corpus((0 until 40).map(i => (java.lang.Long.valueOf(i.toLong), vec(8))), 5)
+    val q = Seq((1L, vec(8).toSeq), (2L, vec(8).toSeq)).toDF("qid", "qv")
+    val df = Knn.knnJoin(q, "qv", "qid", c, "vec", "id", 3)
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler._
+    val (jobs, jobsDone, stages, tasks) =
+      (new AtomicInteger, new AtomicInteger, new AtomicInteger, new AtomicInteger)
+    val shuffleBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { jobsDone.incrementAndGet(); () }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val got = rows(df)
+      // the listener bus is asynchronous: wait for the job's end, then
+      // give a second job's events time to arrive
+      val deadline = System.nanoTime() + 10000000000L
+      while (jobsDone.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(300)
+      got
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(got == rows(KnnJoinReference.knnJoin(q, "qv", "qid", c, "vec", "id", 3,
+      VectorMetrics.L2)))
+    assert((jobs.get(), stages.get(), tasks.get()) == ((1, 1, 5)))
+    assert(shuffleBytes.get() == 0L)
+    assert(!df.queryExecution.executedPlan.toString.contains("AdaptiveSparkPlan"))
+  }
+
+  test("query rows sharing a qid, null included, share one top k like groupBy") {
+    val d = vec(6)
+    val c = corpus((0 until 40).map(i => (java.lang.Long.valueOf(i.toLong), vec(6))) ++
+      Seq(100L, 7L).map(i => (java.lang.Long.valueOf(i), d.clone())), 4)
+    val q = queries(Seq((1L, vec(6)), (2L, d.clone()), (1L, vec(6)), (null, vec(6)),
+      (3L, null), (null, vec(6)), (1L, d.clone()), (3L, vec(6))))
+    assertParity(q, "qv", c, 4)
+    // floating-point qids group as groupBy keys them: -0.0 with 0.0, NaNs
+    // together (compared as text: a NaN qid never equals itself)
+    val dq = frame(StructType(Seq(StructField("qid", DoubleType),
+        StructField("qv", ArrayType(FloatType)))),
+      Seq(0.0, -0.0, Double.NaN, java.lang.Double.longBitsToDouble(0xfff8000000000001L))
+        .map(x => Row(x, vec(6).toSeq)), 2)
+    def keyed(df: DataFrame) = rows(df).map(t => t.copy(_1 = String.valueOf(t._1)))
+    for (m <- Seq(VectorMetrics.L2, VectorMetrics.Cosine)) {
+      val got = keyed(Knn.knnJoin(dq, "qv", "qid", c, "vec", "id", 3, m))
+      assert(got.map(_._1).distinct == Seq("0.0", "NaN"))
+      assert(got == keyed(KnnJoinReference.knnJoin(dq, "qv", "qid", c, "vec", "id", 3, m)))
+    }
+  }
+
+  test("under a union or a join the fused join returns its own collect's rows") {
+    val c = corpus((0 until 50).map(i => (java.lang.Long.valueOf(i.toLong), vec(8))), 6)
+    val q = queries(Seq((1L, vec(8)), (2L, vec(8)), (3L, vec(8))))
+    val fused = Knn.knnJoin(q, "qv", "qid", c, "vec", "id", 4)
+    val own = rows(fused)
+    assert(own.size == 3 * 4)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], fused.schema)
+    val union = fused.union(empty)
+    assert(union.queryExecution.executedPlan.toString.contains("KnnJoin"))
+    assert(rows(union) == own)
+    val joined = fused.join(fused.select(col("qid"), col("rank"), col("nid").as("nid2")),
+      Seq("qid", "rank"))
+    assert(joined.filter(col("nid") =!= col("nid2")).isEmpty)
+    assert(rows(joined.select("qid", "rank", "nid", "dist")) == own)
+    assert(fused.count() == own.size)
+  }
+
   test("query columns named qv/qid and a corpus with its own qid column") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qs = emb.filter(col("vec_id") < 3)

@@ -82,13 +82,17 @@ class PlanContractSpec extends SparkSpec {
     assert(p.contains("lsh_signature"), "compiled signature kernel missing")
   }
 
-  test("knn join aggregates with map-side partial top-k heaps") {
+  test("knn join is one fused node that merges its own heaps") {
     val p = plan("knn_join")
-    assert(p.contains("topk_pairs"), "bounded-heap aggregate missing")
-    assert(p.contains("ObjectHashAggregate"))
     // one fused query x corpus scan, never a per-pair join
     assert(p.contains("KnnJoin"), "fused knn join node missing")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+    // the node merges the per-partition heaps: no broadcast stage and no
+    // top-k aggregate, and nothing is exchanged between it and the scans
+    assert(!p.contains("BroadcastExchange"), "query side broadcast as a stage")
+    assert(!p.contains("topk_pairs"), "top-k aggregate after the fused node")
+    assert(!p.substring(p.indexOf("KnnJoin")).contains("Exchange"),
+      "exchange between the corpus scan and KnnJoin")
   }
 
   test("pq searches shortlist via bounded heaps and never sort-merge-join") {
