@@ -6,42 +6,39 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 object SparkEntry {
   type Q = (SparkSession, String) => DataFrame
 
+  /** One gated query: its builder and the equivalent ANSI SQL the DuckDB
+    * oracle runs on the same parquet tables (None → rows-only check). */
+  final case class Gated(name: String, build: Q, oracle: Option[String])
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("vec_l2_topk")(spark, "/root/testdata/sf0.001")
 
-  /** Every gated suite's (queries, oracle SQL) pair. */
-  private def suites: Seq[(Map[String, Q], Map[String, String])] = {
+  /** Every gated suite's records, in suite order. */
+  private def gated: Seq[Gated] = {
     import graft.queries._
-    Seq(VectorSuite.queries -> VectorSuite.oracle,
-      RelationalSuite.queries -> RelationalSuite.oracle,
-      RelationalSuite2.queries -> RelationalSuite2.oracle,
-      RelationalSuite3.queries -> RelationalSuite3.oracle,
-      RelationalSuite4.queries -> RelationalSuite4.oracle,
-      RelationalSuite5.queries -> RelationalSuite5.oracle,
-      MlSuite.queries -> MlSuite.oracle,
-      SeasonalSuite.queries -> SeasonalSuite.oracle,
-      AnnSuite.queries -> AnnSuite.oracle,
-      TextSuite.queries -> TextSuite.oracle,
-      DedupSuite.queries -> DedupSuite.oracle,
-      SqlStatementSuite.queries -> SqlStatementSuite.oracle,
-      StreamingSuite.queries -> StreamingSuite.oracle)
+    union(Seq(VectorSuite.gated, RelationalSuite.gated,
+      RelationalSuite2.gated, RelationalSuite3.gated, RelationalSuite4.gated,
+      RelationalSuite5.gated, MlSuite.gated, SeasonalSuite.gated,
+      AnnSuite.gated, TextSuite.gated, DedupSuite.gated,
+      SqlStatementSuite.gated, StreamingSuite.gated))
   }
 
-  /** Union of per-suite maps. A name two suites define throws: `++`
-    * would silently keep the last one and drop the other's query. */
-  private[graft] def union[V](maps: Seq[Map[String, V]]): Map[String, V] =
-    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
-      val dup = acc.keySet.intersect(m.keySet)
-      require(dup.isEmpty,
-        s"graft: query names defined by two suites: ${dup.toSeq.sorted.mkString(", ")}")
-      acc ++ m
-    }
+  /** Concatenation of per-suite records. A name defined twice throws: a
+    * map keyed by name would silently keep one and drop the other. */
+  private[graft] def union(suites: Seq[Seq[Gated]]): Seq[Gated] = {
+    val all = suites.flatten
+    val dup = all.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    require(dup.isEmpty,
+      s"graft: query names defined twice: ${dup.toSeq.sorted.mkString(", ")}")
+    all
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, Q] = union(suites.map(_._1))
+  def queries: Map[String, Q] = gated.map(g => g.name -> g.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check. */
-  def oracleSql: Map[String, String] = union(suites.map(_._2))
+  def oracleSql: Map[String, String] =
+    gated.flatMap(g => g.oracle.map(g.name -> _)).toMap
 }

@@ -158,9 +158,27 @@ object Isn {
    * (isn.cpp hyphenate → "just compress the string"). The full
    * 700-row international table plugs into the same CASE shape.
    */
-  def hyphenateIsbn13(s13: Column): Column = {
+  def hyphenateIsbn13(s13: Column): Column =
+    hyphenateIsbn13(s13, isbn13PublisherLen(s13))
+
+  /** [[hyphenateIsbn13]] given the code's [[isbn13PublisherLen]], which
+    * the hyphenation reads four times: a query that stages it in its own
+    * projection keeps the range tree out of the hyphenating one. */
+  def hyphenateIsbn13(s13: Column, n: Column): Column = {
     val group = substring(s13, 4, 1)
     val rest = substring(s13, 5, 8) // 8 payload digits after the group
+    when(n > 0,
+      concat(substring(s13, 1, 3), lit("-"), group, lit("-"),
+        rest.substr(lit(1), n), lit("-"),
+        rest.substr(n + 1, lit(8) - n), lit("-"), substring(s13, 13, 1)))
+      .otherwise(s13)
+  }
+
+  /** Publisher-segment length of an unhyphenated ISBN-13 from the
+    * embedded range table; 0 when the code is outside those groups. */
+  def isbn13PublisherLen(s13: Column): Column = {
+    val group = substring(s13, 4, 1)
+    val rest = substring(s13, 5, 8)
     def pubLen(bounds: Seq[(String, String, Int)]): Column =
       bounds.foldRight(lit(0)) { case ((lo, hi, n), els) =>
         when(substring(rest, 1, n).between(lo, hi), lit(n)).otherwise(els)
@@ -169,22 +187,25 @@ object Isn {
       ("85000", "89999", 5), ("900000", "949999", 6), ("9500000", "9999999", 7))
     val g1 = Seq(("00", "09", 2), ("100", "399", 3), ("4000", "5499", 4),
       ("55000", "86979", 5), ("869800", "998999", 6), ("9990000", "9999999", 7))
-    val n = when(group === "0", pubLen(g0))
+    when(group === "0", pubLen(g0))
       .when(group === "1", pubLen(g1)).otherwise(lit(0))
-    when(n > 0,
-      concat(substring(s13, 1, 3), lit("-"), group, lit("-"),
-        rest.substr(lit(1), n), lit("-"),
-        rest.substr(n + 1, lit(8) - n), lit("-"), substring(s13, 13, 1)))
-      .otherwise(s13)
   }
 
   /** Hyphenate an ISBN-10 with the same embedded group-0/1 ranges —
     * the 13-form's layout minus the '978-' prefix ('0-393-04002-X';
     * the trailing char 13 of the padded code IS the ISBN-10 check
     * char, so the hyphen positions carry over unchanged). */
-  def hyphenateIsbn10(s10: Column): Column = {
-    val h13 = hyphenateIsbn13(concat(lit("978"), s10))
+  def hyphenateIsbn10(s10: Column): Column =
+    hyphenateIsbn10(s10, isbn10PublisherLen(s10))
+
+  /** [[hyphenateIsbn10]] given the code's [[isbn10PublisherLen]]. */
+  def hyphenateIsbn10(s10: Column, n: Column): Column = {
+    val h13 = hyphenateIsbn13(concat(lit("978"), s10), n)
     // drop the '978-' prefix (4 chars); 20 > any hyphenated remainder
     when(h13.contains("-"), substring(h13, 5, 20)).otherwise(s10)
   }
+
+  /** Publisher-segment length of an ISBN-10 (that of its '978' form). */
+  def isbn10PublisherLen(s10: Column): Column =
+    isbn13PublisherLen(concat(lit("978"), s10))
 }

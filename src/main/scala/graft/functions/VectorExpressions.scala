@@ -43,108 +43,29 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"graft: vector dims differ: $n vs ${y.numElements()}")
     metric match {
-      case VectorMetrics.L2 =>
-        var acc = 0.0; var i = 0
-        while (i < n) { val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble; acc += d * d; i += 1 }
-        math.sqrt(acc)
-      case VectorMetrics.L2Sq =>
-        var acc = 0.0; var i = 0
-        while (i < n) { val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble; acc += d * d; i += 1 }
-        acc
-      case VectorMetrics.Ip =>
-        var acc = 0.0; var i = 0
-        while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-        acc
-      case VectorMetrics.NegIp =>
-        var acc = 0.0; var i = 0
-        while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-        -acc
-      case VectorMetrics.Cosine =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xa = x.getFloat(i).toDouble; val xb = y.getFloat(i).toDouble
-          dot += xa * xb; na += xa * xa; nb += xb * xb; i += 1
-        }
-        val sim = dot / math.sqrt(na * nb)
-        1.0 - math.max(-1.0, math.min(1.0, sim))
-      case VectorMetrics.L1 =>
-        var acc = 0.0; var i = 0
-        while (i < n) { acc += math.abs(x.getFloat(i).toDouble - y.getFloat(i).toDouble); i += 1 }
-        acc
-      case VectorMetrics.Spherical =>
-        var acc = 0.0; var i = 0
-        while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-        math.acos(math.max(-1.0, math.min(1.0, acc))) / math.Pi
+      case VectorMetrics.L2 => VectorKernel.l2(x, y)
+      case VectorMetrics.L2Sq => VectorKernel.l2sq(x, y)
+      case VectorMetrics.Ip => VectorKernel.dot(x, y)
+      case VectorMetrics.NegIp => VectorKernel.negDot(x, y)
+      case VectorMetrics.Cosine => VectorKernel.cosineDistance(x, y)
+      case VectorMetrics.L1 => VectorKernel.l1(x, y)
+      case VectorMetrics.Spherical => VectorKernel.spherical(x, y)
     }
   }
 
+  /** The same [[VectorKernel]] method, called from generated code. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xa = ctx.freshName("xa"); val xb = ctx.freshName("xb")
-      val header =
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  throw new IllegalArgumentException("graft: vector dims differ: " +
-           |    $n + " vs " + $b.numElements());
-           |}
-         """.stripMargin
-      val body = metric match {
-        case VectorMetrics.L2 | VectorMetrics.L2Sq =>
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-             |  $acc += $d * $d;
-             |}
-             |${ev.value} = ${if (metric == VectorMetrics.L2) s"Math.sqrt($acc)" else acc};
-           """.stripMargin
-        case VectorMetrics.Ip | VectorMetrics.NegIp =>
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-             |}
-             |${ev.value} = ${if (metric == VectorMetrics.Ip) acc else s"-$acc"};
-           """.stripMargin
-        case VectorMetrics.Cosine =>
-          s"""
-             |double $acc = 0.0; double $na = 0.0; double $nb = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double $xa = (double) $a.getFloat($i);
-             |  double $xb = (double) $b.getFloat($i);
-             |  $acc += $xa * $xb; $na += $xa * $xa; $nb += $xb * $xb;
-             |}
-             |double $d = $acc / Math.sqrt($na * $nb);
-             |${ev.value} = 1.0 - Math.max(-1.0, Math.min(1.0, $d));
-           """.stripMargin
-        case VectorMetrics.L1 =>
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += Math.abs((double) $a.getFloat($i) - (double) $b.getFloat($i));
-             |}
-             |${ev.value} = $acc;
-           """.stripMargin
-        case VectorMetrics.Spherical =>
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-             |}
-             |${ev.value} = Math.acos(Math.max(-1.0, Math.min(1.0, $acc))) / Math.PI;
-           """.stripMargin
-      }
-      header + body
-    })
+    val kernel = metric match {
+      case VectorMetrics.L2 => "l2"
+      case VectorMetrics.L2Sq => "l2sq"
+      case VectorMetrics.Ip => "dot"
+      case VectorMetrics.NegIp => "negDot"
+      case VectorMetrics.Cosine => "cosineDistance"
+      case VectorMetrics.L1 => "l1"
+      case VectorMetrics.Spherical => "spherical"
+    }
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernel.$kernel($a, $b)")
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

@@ -1,15 +1,20 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.util.ArrayData
+
 /**
- * The scalar distance kernel over fp32 vectors held in `float[]`, for
+ * The scalar distance kernel over fp32 vectors: `float[]` forms for
  * task-side loops (the fused KNN join, IVF probe ranking, HNSW beams,
- * k-means and PQ encoding).
+ * k-means and PQ encoding), and `ArrayData` forms that
+ * [[VectorDistance]] calls from both its interpreted and its generated
+ * code.
  *
  * Every element pair is widened to double and accumulated in index
- * order: `acc += ((double) a[i] - (double) b[i])²`. That is the
- * summation order of [[VectorDistance]]'s generated code, so a distance
- * computed here is bit-identical to the SQL surface's. Callers must keep
- * `a.length == b.length`; the loops run over `a.length`.
+ * order: `acc += ((double) a[i] - (double) b[i])²`. Both forms sum in
+ * that order, so a distance computed here is bit-identical to the SQL
+ * surface's. Callers of the `float[]` forms must keep
+ * `a.length == b.length`; the loops run over `a.length`. The `ArrayData`
+ * forms check the dims themselves.
  */
 object VectorKernel {
 
@@ -79,4 +84,61 @@ object VectorKernel {
     }
     acc
   }
+
+  // ---- the SQL surface: one method per VectorMetrics metric ----
+
+  /** The common length of `a` and `b`; differing dims throw, like the
+    * reference's CheckDims. */
+  private def dims(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (n != b.numElements())
+      throw new IllegalArgumentException(
+        s"graft: vector dims differ: $n vs ${b.numElements()}")
+    n
+  }
+
+  /** √Σ ((double) a[i] − (double) b[i])². */
+  def l2(a: ArrayData, b: ArrayData): Double = math.sqrt(l2sq(a, b))
+
+  /** Σ ((double) a[i] − (double) b[i])². */
+  def l2sq(a: ArrayData, b: ArrayData): Double = {
+    val n = dims(a, b)
+    var acc = 0.0; var i = 0
+    while (i < n) { val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble; acc += d * d; i += 1 }
+    acc
+  }
+
+  /** Σ (double) a[i] · (double) b[i]. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = dims(a, b)
+    var acc = 0.0; var i = 0
+    while (i < n) { acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** −[[dot]]. */
+  def negDot(a: ArrayData, b: ArrayData): Double = -dot(a, b)
+
+  /** 1 − clamp(a·b / √(‖a‖²‖b‖²), −1, 1), the three sums in one pass. */
+  def cosineDistance(a: ArrayData, b: ArrayData): Double = {
+    val n = dims(a, b)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val xa = a.getFloat(i).toDouble; val xb = b.getFloat(i).toDouble
+      dot += xa * xb; na += xa * xa; nb += xb * xb; i += 1
+    }
+    1.0 - math.max(-1.0, math.min(1.0, dot / math.sqrt(na * nb)))
+  }
+
+  /** Σ |(double) a[i] − (double) b[i]|. */
+  def l1(a: ArrayData, b: ArrayData): Double = {
+    val n = dims(a, b)
+    var acc = 0.0; var i = 0
+    while (i < n) { acc += math.abs(a.getFloat(i).toDouble - b.getFloat(i).toDouble); i += 1 }
+    acc
+  }
+
+  /** acos(clamp(a·b, −1, 1)) / π. */
+  def spherical(a: ArrayData, b: ArrayData): Double =
+    math.acos(math.max(-1.0, math.min(1.0, dot(a, b)))) / math.Pi
 }

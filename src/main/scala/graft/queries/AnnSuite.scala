@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Gated
 import graft.Tables
 import graft.functions.{VectorFunctions => VF}
 import graft.operators.{Hnsw, Ivf, IvfBit, Knn, Lsh, Pq}
@@ -20,8 +21,6 @@ import org.apache.spark.sql.functions._
  * spec-asserted in AnnSpec.
  */
 object AnnSuite {
-  type Q = (SparkSession, String) => DataFrame
-
   private def queryVec(s: SparkSession, dir: String): Array[Float] =
     Tables(s, dir, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).toArray
@@ -88,28 +87,38 @@ object AnnSuite {
       (m, enc.cache())
     })
 
-  val queries: Map[String, Q] = Map(
+  private val distSql =
+    "round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6)"
+
+  val gated: Seq[Gated] = Seq(
     // B1: exact top-k — TakeOrderedAndProject, no shuffle.
-    "knn_exact" -> ((s, dir) =>
+    Gated("knn_exact", (s, dir) =>
       Knn.exactTopK(Tables(s, dir, "embeddings"), "embedding", "vec_id",
-        queryVec(s, dir), 20)),
+        queryVec(s, dir), 20),
+      Some(s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+         |SELECT e.vec_id, $distSql AS dist
+         |FROM embeddings e, q ORDER BY dist, vec_id LIMIT 20""".stripMargin)),
 
     // filtered KNN — pgvector's `WHERE label = ? ORDER BY emb <-> q
     // LIMIT k`: the metadata predicate REACHES THE SCAN (PushedFilters,
     // plan-asserted in AnnSpec) and the top-k is still a bounded-heap
     // TakeOrderedAndProject over only the filtered rows — no
     // post-search re-filtering that would under-fill k
-    "knn_filtered" -> ((s, dir) =>
+    Gated("knn_filtered", (s, dir) =>
       Knn.exactTopK(
         Tables(s, dir, "embeddings").filter(col("label") === 2),
-        "embedding", "vec_id", queryVec(s, dir), 10)),
+        "embedding", "vec_id", queryVec(s, dir), 10),
+      Some(s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+         |SELECT e.vec_id, $distSql AS dist
+         |FROM embeddings e, q WHERE e.label = 2
+         |ORDER BY dist, vec_id LIMIT 10""".stripMargin)),
 
     // B11: radius search (`WHERE embedding <-> q < ε`) with LOSSLESS
     // IVF list pruning — the triangle inequality proves a list whose
     // ||q−c|| − radius exceeds ε holds no result, so the oracle is the
     // plain brute-force distance filter (zero recall qualifier) while
     // the plan skips unprunable partitions at the reader
-    "vec_range" -> ((s, dir) => {
+    Gated("vec_range", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       val tagged = Ivf.assign(emb, "embedding", model)
@@ -117,7 +126,12 @@ object AnnSuite {
       Ivf.rangeSearch(tagged, "embedding", "vec_id", model, radii,
           queryVec(s, dir), eps = 1.2)
         .transform(graft.queries.Gate.ordered(_, "vec_id"))
-    }),
+    },
+      // brute-force filter IS the oracle — the pruning is lossless
+      Some(s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+         |SELECT e.vec_id, $distSql AS dist
+         |FROM embeddings e, q WHERE $distSql <= 1.2
+         |ORDER BY vec_id""".stripMargin)),
 
     // B12: scalar (int8) quantized search — the compression tier
     // between halfvec and binary_quantize (pgvector 0.7's int8 axis;
@@ -125,7 +139,7 @@ object AnnSuite {
     // [lo, hi] from ONE aggregate, codes 4× smaller than fp32, and
     // quantized L2 is pure INTEGER arithmetic (Σ(qa−qb)²) — rankings
     // engine-exact with no float tolerance at all
-    "vec_int8_topk" -> ((s, dir) => {
+    Gated("vec_int8_topk", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val r = emb.agg(
         min(array_min(col("embedding").cast("array<double>"))).as("lo"),
@@ -137,22 +151,43 @@ object AnnSuite {
       codes.crossJoin(broadcast(q))
         .select(col("vec_id"), VF.int8DistSq(col("c"), col("qc")).as("dist2"))
         .orderBy(col("dist2"), col("vec_id")).limit(10)
-    }),
+    },
+      // identical quantization arithmetic: IEEE (x−lo)/(hi−lo)·254−127,
+      // HALF_UP round (ties away from zero in both engines), then pure
+      // integer Σ(qa−qb)²
+      Some("""WITH g AS (SELECT min(list_min(embedding))::DOUBLE AS lo,
+        |             max(list_max(embedding))::DOUBLE AS hi FROM embeddings),
+        |codes AS (SELECT vec_id, list_transform(embedding, x ->
+        |    CAST(round((x::DOUBLE - lo) / (hi - lo) * 254 - 127, 0) AS INTEGER)) AS c
+        |  FROM embeddings CROSS JOIN g),
+        |q AS (SELECT c AS qc FROM codes WHERE vec_id = 0)
+        |SELECT vec_id, CAST(list_sum(list_transform(range(1, len(c) + 1),
+        |    i -> CAST(c[i] - qc[i] AS BIGINT) * (c[i] - qc[i]))) AS BIGINT) AS dist2
+        |FROM codes, q ORDER BY dist2, vec_id LIMIT 10""".stripMargin)),
 
     // B2: many-query KNN join with bounded-heap partial aggregation.
-    "knn_join" -> ((s, dir) => {
+    Gated("knn_join", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 5)
       Knn.knnJoin(qs, "embedding", "vec_id", emb, "embedding", "vec_id", 5)
         .transform(Gate.ordered(_, "qid", "rank"))
-    }),
+    },
+      Some("""WITH qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
+        |ranked AS (
+        |  SELECT qs.qid, e.vec_id AS nid,
+        |    round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6) AS dist,
+        |    row_number() OVER (PARTITION BY qs.qid
+        |      ORDER BY round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6), e.vec_id) AS rank
+        |  FROM embeddings e, qs)
+        |SELECT qid, rank, nid, dist FROM ranked WHERE rank <= 5
+        |ORDER BY qid, rank""".stripMargin)),
 
     // B3: IVF build — coverage invariants: every corpus row lands in
     // exactly one list (n_rows = count(embeddings)) and list ids stay
     // inside [0, nlists). The per-list histogram itself is
     // k-means-seed-specific, so the GATED output is the invariant set;
     // the histogram stays visible via Ivf.centroidDrift and AnnSpec.
-    "ivf_build" -> ((s, dir) => {
+    Gated("ivf_build", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       Ivf.assign(emb, "embedding", model)
@@ -164,13 +199,18 @@ object AnnSuite {
         .select(col("n_rows"),
           (col("n_lists_used").between(1, 16) &&
             col("min_list") >= 0 && col("max_list") <= 15).as("lists_ok"))
-    }),
+    },
+      // Invariant gates for the approximate operators: cardinality is an
+      // exact contract; the recall booleans are Spark-computed against the
+      // in-query exact KNN and must be TRUE at the declared floors (floors
+      // sit under AnnSpec's asserted recalls with margin).
+      Some("SELECT count(*) AS n_rows, TRUE AS lists_ok FROM embeddings")),
 
     // B4: IVF nprobe search — exact-cardinality + recall invariants.
     // The budget is autoNprobe: base 4 of 16 lists (~1/4 of the
     // corpus) at production density, widened on thin corpora so the
     // 0.5 recall floor holds deterministically.
-    "ivf_search" -> ((s, dir) => {
+    Gated("ivf_search", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       val tagged = Ivf.assign(emb, "embedding", model)
@@ -179,7 +219,8 @@ object AnnSuite {
         k = 10, nprobe = Ivf.autoNprobe(corpusN(s, dir), 16, k = 10, base = 4, minHits = 5))
       recallGate(found, Knn.exactTopK(emb, "embedding", "vec_id", qv, 10),
         "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // B9: product-quantization ADC search — the memory-side scale path
     // (32x compression at dim 64 / m 8). Codes scanned with the query's
@@ -187,7 +228,7 @@ object AnnSuite {
     // rerank of 16k candidates; recall gated vs exact KNN (measured
     // 10/10 at sf0.01, 9/10 at sf0.1 on these near-random embeddings —
     // PQ's worst-case geometry; gate floors at 5).
-    "pq_search" -> ((s, dir) => {
+    Gated("pq_search", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = pqModel(s, dir)
       val encoded = Pq.encode(emb, "embedding", "vec_id", model)
@@ -197,13 +238,14 @@ object AnnSuite {
         .withColumnRenamed("id", "vec_id")
       recallGate(found, Knn.exactTopK(emb, "embedding", "vec_id", qv, 10),
         "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // B9b: IVF-PQ — residual codes per IVF list, nprobe-pruned ADC scan
     // (probed lists only), per-list residual tables, exact rerank.
     // Measured 10/10 at sf0.01, 8/10 at sf0.1 (nprobe 8/16, rerank 16);
     // floor 5.
-    "ivfpq_search" -> ((s, dir) => {
+    Gated("ivfpq_search", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val ivf = ivfModel(s, dir, 16)
       val (pq, encoded) = ivfPqIndex(s, dir, ivf)
@@ -213,11 +255,12 @@ object AnnSuite {
         .withColumnRenamed("id", "vec_id")
       recallGate(found, Knn.exactTopK(emb, "embedding", "vec_id", qv, 10),
         "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // B5: hyperplane-LSH banded ANN — recall gate under the SAME metric
     // the ANN reranks with (cosine).
-    "lsh_ann" -> ((s, dir) => {
+    Gated("lsh_ann", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val planes = Lsh.hyperplanes(dim = 64, nbits = 16)
       val qv = queryVec(s, dir)
@@ -227,19 +270,21 @@ object AnnSuite {
         Knn.exactTopK(emb, "embedding", "vec_id", qv, 10,
           graft.functions.VectorFunctions.cosineDistance),
         "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // B5b: per-partition NSW graph ANN + beam search (the HNSW
     // analogue). AnnSpec asserts recall >= 0.8 at this budget; the
     // driver gate floors at 0.6.
-    "hnsw_ann" -> ((s, dir) => {
+    Gated("hnsw_ann", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val index = Hnsw.buildIndex(emb, "embedding", "vec_id", numParts = 8)
       val qv = queryVec(s, dir)
       val found = Hnsw.search(index, qv, k = 10)
       recallGate(found, Knn.exactTopK(emb, "embedding", "vec_id", qv, 10),
         "vec_id", minHits = 6)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // B5c/B8: routed many-query search over CLUSTERED NSW shards — each
     // query beams only in its nprobe nearest lists (the batch ANN shape
@@ -247,9 +292,10 @@ object AnnSuite {
     // built ONCE per corpus and persisted partitionBy(part_id), so the
     // routing filter prunes whole shard directories at the parquet
     // reader (PartitionFilters asserted in PlanContractSpec) — an index
-    // is a build-once artifact, not per-query work. Approximate →
-    // rows-only; recall vs unrouted searchMany asserted in AnnSpec.
-    "hnsw_routed" -> ((s, dir) => {
+    // is a build-once artifact, not per-query work. Approximate, so the
+    // oracle checks per-query invariants; recall vs unrouted searchMany
+    // is asserted in AnnSpec.
+    Gated("hnsw_routed", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val path = s"target/graft-nsw/${new java.io.File(dir).getName}"
       // the quantizer model is part of the index artifact: persist it
@@ -292,12 +338,25 @@ object AnnSuite {
         .select(col("qid"), col("n_results"),
           (coalesce(col("n_hits"), lit(0L)) >= 3).as("recall_ok"))
         .transform(Gate.ordered(_, "qid"))
-    }),
+    },
+      Some("""SELECT vec_id AS qid, CAST(5 AS BIGINT) AS n_results, TRUE AS recall_ok
+        |FROM embeddings WHERE vec_id < 5 ORDER BY qid""".stripMargin)),
 
     // B6: binary-quantize coarse + exact rerank (exact SQL oracle).
-    "binquant_rerank" -> ((s, dir) =>
+    Gated("binquant_rerank", (s, dir) =>
       Lsh.binQuantRerank(Tables(s, dir, "embeddings"), "embedding", "vec_id",
-        queryVec(s, dir), k = 10, oversample = 5)),
+        queryVec(s, dir), k = 10, oversample = 5),
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+        |coarse AS (
+        |  SELECT e.vec_id, e.embedding,
+        |    list_sum(list_transform(generate_series(1, len(e.embedding)),
+        |      i -> CASE WHEN (e.embedding[i] > 0) <> (q.qv[i] > 0) THEN 1 ELSE 0 END)) AS hamm
+        |  FROM embeddings e, q
+        |  ORDER BY hamm, vec_id LIMIT 50)
+        |SELECT c.vec_id,
+        |  round(list_distance(c.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
+        |FROM coarse c, q
+        |ORDER BY dist, vec_id LIMIT 10""".stripMargin)),
 
     // B7: incremental index maintenance end-to-end (ref: ivfinsert.cpp /
     // ivfflatbulkdelete) — build the partitioned index WITHOUT a held-out
@@ -308,7 +367,7 @@ object AnnSuite {
     // `embeddings`, and the nprobe=nlists search is the exact top-10 of
     // the remaining corpus (rounded-dist, vec_id tiebreak — same order
     // contract as knn_exact).
-    "ivf_append" -> ((s, dir) => {
+    Gated("ivf_append", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       val path = s"target/graft-ivf-append/${new java.io.File(dir).getName}"
@@ -328,12 +387,27 @@ object AnnSuite {
           .agg(count(lit(1)).as("n_top10_from_delta")))
         .crossJoin(found.orderBy(col("dist"), col("vec_id")).limit(1)
           .select(col("vec_id").as("top1_id")))
-    }),
+    },
+      // ivf_append's whole output is exact SQL over `embeddings`: the
+      // remaining corpus is everything minus the victim set, and the
+      // nprobe=nlists search is its exact top-10 by (rounded l2, vec_id).
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+        |remaining AS (SELECT * FROM embeddings WHERE vec_id % 1000 <> 123),
+        |top10 AS (
+        |  SELECT e.vec_id,
+        |    round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
+        |  FROM remaining e, q ORDER BY dist, vec_id LIMIT 10)
+        |SELECT
+        |  (SELECT count(*) FROM remaining) AS n_total,
+        |  (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 7) AS n_delta,
+        |  (SELECT count(*) FROM embeddings WHERE vec_id % 1000 = 123) AS n_deleted,
+        |  (SELECT count(*) FROM top10 WHERE vec_id % 10 = 7) AS n_top10_from_delta,
+        |  (SELECT vec_id FROM top10 ORDER BY dist, vec_id LIMIT 1) AS top1_id""".stripMargin)),
 
     // B2+B3: many-query KNN join routed through the IVF lists — the
     // scalable (equi-join, no broadcast) path. nprobe = nlists makes it
     // exact, so the SQL window-rank oracle applies.
-    "ivf_knn_join" -> ((s, dir) => {
+    Gated("ivf_knn_join", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       val tagged = Ivf.assign(emb, "embedding", model)
@@ -341,7 +415,16 @@ object AnnSuite {
       Ivf.knnJoin(qs, "embedding", "vec_id", tagged, "embedding", "vec_id",
           model, k = 5, nprobe = 16)
         .transform(Gate.ordered(_, "qid", "rank"))
-    }),
+    },
+      Some("""WITH qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
+        |ranked AS (
+        |  SELECT qs.qid, e.vec_id AS nid,
+        |    round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6) AS dist,
+        |    row_number() OVER (PARTITION BY qs.qid
+        |      ORDER BY round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6), e.vec_id) AS rank
+        |  FROM embeddings e, qs)
+        |SELECT qid, rank, nid, dist FROM ranked WHERE rank <= 5
+        |ORDER BY qid, rank""".stripMargin)),
 
     // Sparse-vector top-k via inverted postings (SparseAnn): sparsify
     // |x| > 0.1 (the A19 convention), floor-quantize to milli-units,
@@ -349,7 +432,7 @@ object AnnSuite {
     // dot sums, bounded payload heap per query. The oracle recomputes
     // the identical quantized dot DENSELY — the gate proves the
     // postings plan equals the merge-scan arithmetic bit-for-bit.
-    "vec_sparse_topk" -> ((s, dir) => {
+    Gated("vec_sparse_topk", (s, dir) => {
       def entries(c: Column) =
         filter(transform(c, (x, i) => struct(i.as("i"), x.as("v"))),
           e => abs(e.getField("v")) > 0.1f)
@@ -363,7 +446,29 @@ object AnnSuite {
           sp.filter(col("vec_id") < 3), "vec_id", "sidx", "sval", k = 10)
         .withColumnRenamed("id", "vec_id")
         .transform(Gate.ordered(_, "qid", "rank"))
-    }),
+    },
+      // dense recomputation of the quantized sparse dot: floor(v*1000)
+      // milli-units, integer products — order-invariant exact sums, so
+      // the postings plan must match bit-for-bit. Candidates require
+      // >= 1 shared stored dimension (the inverted-index contract).
+      Some("""WITH s AS (SELECT vec_id, list_transform(embedding,
+        |    x -> CASE WHEN abs(x) > 0.1
+        |              THEN CAST(floor(x::DOUBLE * 1000) AS BIGINT)
+        |              ELSE 0 END) AS qe FROM embeddings),
+        |q AS (SELECT vec_id AS qid, qe AS qq FROM s WHERE vec_id < 3),
+        |d AS (SELECT q.qid, s.vec_id,
+        |        list_sum(list_transform(generate_series(1, len(s.qe)),
+        |          i -> s.qe[i] * q.qq[i]))::BIGINT AS dot,
+        |        len(list_filter(generate_series(1, len(s.qe)),
+        |          i -> s.qe[i] != 0 AND q.qq[i] != 0))::BIGINT AS n_common
+        |      FROM s, q),
+        |r AS (SELECT qid, vec_id, n_common, dot,
+        |        row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id)
+        |          AS rank
+        |      FROM d WHERE n_common > 0)
+        |SELECT qid, rank::INT AS rank, vec_id, n_common,
+        |  CAST(dot AS DOUBLE) / 1000000 AS score
+        |FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
 
     // IVF search END-TO-END over packed-fp16 BINARY storage: the index
     // is WRITTEN as partitionBy(list_id) parquet holding 2-byte/elem
@@ -371,7 +476,7 @@ object AnnSuite {
     // prunes list partitions AT THE READER, and distance runs DIRECTLY
     // on the packed bytes (no unpack in the hot path). Recall gated vs
     // exact fp32 KNN — fp16 rounding costs ~nothing on these corpora.
-    "ivf_half_search" -> ((s, dir) => {
+    Gated("ivf_half_search", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       val path = s"target/graft-ivfhalf/${new java.io.File(dir).getName}"
@@ -391,13 +496,14 @@ object AnnSuite {
         .orderBy(col("dist"), col("vec_id")).limit(10)
       recallGate(found, Knn.exactTopK(emb, "embedding", "vec_id", qv, 10),
         "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // IVF search over int8 scalar-quantized codes (B13 storage tier,
     // 4x smaller than fp32): same partitioned layout + reader pruning,
     // candidates ranked by the integer-exact quantized L2. Recall vs
     // exact fp32 KNN (quantization grid ~(hi-lo)/255 ≈ 0.03σ here).
-    "ivf_int8_search" -> ((s, dir) => {
+    Gated("ivf_int8_search", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val model = ivfModel(s, dir, 16)
       val r = emb.agg(
@@ -422,7 +528,8 @@ object AnnSuite {
         .orderBy(col("dist2"), col("vec_id")).limit(10)
       recallGate(found, Knn.exactTopK(emb, "embedding", "vec_id", qv, 10),
         "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // Hamming-metric IVF over sign-quantized bit codes (the `bit`
     // opclass tier, 32x compression — the remaining datavec index
@@ -430,7 +537,7 @@ object AnnSuite {
     // reader-pruned layout as the fp16/int8 tiers, popcount ranking.
     // Recall vs the exact HAMMING top-10 over all codes (same metric
     // — quantization loss is the tier's property, not the index's)
-    "ivf_bit_search" -> ((s, dir) => {
+    Gated("ivf_bit_search", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val codes = emb.select(col("vec_id"),
         VF.binaryQuantize(col("embedding")).as("code"))
@@ -444,7 +551,8 @@ object AnnSuite {
           VF.hammingDistance(col("code"), lit(qc)).cast("long").as("dist"))
         .orderBy(col("dist"), col("vec_id")).limit(10)
       recallGate(found, exact, "vec_id", minHits = 5)
-    }),
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok")),
 
     // HNSW over the bit tier (`hnsw_bit_support`): EXACT metric
     // reduction — Hamming(a,b) == L2²(a,b) for 0/1 vectors, a theorem,
@@ -453,7 +561,7 @@ object AnnSuite {
     // neighbor structure IS the Hamming-metric graph; packed-bytes
     // STORAGE rides the IVF bit tier (ivf_bit_search). Recall vs
     // exact Hamming top-10
-    "hnsw_bit" -> ((s, dir) => {
+    Gated("hnsw_bit", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val codes = emb.select(col("vec_id"),
         VF.binaryQuantize(col("embedding")).as("code"))
@@ -473,157 +581,7 @@ object AnnSuite {
           VF.hammingDistance(col("code"), lit(qc)).cast("long").as("dist"))
         .orderBy(col("dist"), col("vec_id")).limit(10)
       recallGate(found, exact, "vec_id", minHits = 5)
-    })
-  )
-
-  private val distSql =
-    "round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6)"
-
-  val oracle: Map[String, String] = Map(
-    "knn_exact" ->
-      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id, $distSql AS dist
-         |FROM embeddings e, q ORDER BY dist, vec_id LIMIT 20""".stripMargin,
-
-    "knn_filtered" ->
-      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id, $distSql AS dist
-         |FROM embeddings e, q WHERE e.label = 2
-         |ORDER BY dist, vec_id LIMIT 10""".stripMargin,
-
-    // brute-force filter IS the oracle — the pruning is lossless
-    "vec_range" ->
-      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id, $distSql AS dist
-         |FROM embeddings e, q WHERE $distSql <= 1.2
-         |ORDER BY vec_id""".stripMargin,
-
-    // identical quantization arithmetic: IEEE (x−lo)/(hi−lo)·254−127,
-    // HALF_UP round (ties away from zero in both engines), then pure
-    // integer Σ(qa−qb)²
-    "vec_int8_topk" ->
-      """WITH g AS (SELECT min(list_min(embedding))::DOUBLE AS lo,
-        |             max(list_max(embedding))::DOUBLE AS hi FROM embeddings),
-        |codes AS (SELECT vec_id, list_transform(embedding, x ->
-        |    CAST(round((x::DOUBLE - lo) / (hi - lo) * 254 - 127, 0) AS INTEGER)) AS c
-        |  FROM embeddings CROSS JOIN g),
-        |q AS (SELECT c AS qc FROM codes WHERE vec_id = 0)
-        |SELECT vec_id, CAST(list_sum(list_transform(range(1, len(c) + 1),
-        |    i -> CAST(c[i] - qc[i] AS BIGINT) * (c[i] - qc[i]))) AS BIGINT) AS dist2
-        |FROM codes, q ORDER BY dist2, vec_id LIMIT 10""".stripMargin,
-
-    "knn_join" ->
-      """WITH qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
-        |ranked AS (
-        |  SELECT qs.qid, e.vec_id AS nid,
-        |    round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6) AS dist,
-        |    row_number() OVER (PARTITION BY qs.qid
-        |      ORDER BY round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6), e.vec_id) AS rank
-        |  FROM embeddings e, qs)
-        |SELECT qid, rank, nid, dist FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    "ivf_knn_join" ->
-      """WITH qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
-        |ranked AS (
-        |  SELECT qs.qid, e.vec_id AS nid,
-        |    round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6) AS dist,
-        |    row_number() OVER (PARTITION BY qs.qid
-        |      ORDER BY round(list_distance(e.embedding::DOUBLE[], qs.qv::DOUBLE[]), 6), e.vec_id) AS rank
-        |  FROM embeddings e, qs)
-        |SELECT qid, rank, nid, dist FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    // Invariant gates for the approximate operators: cardinality is an
-    // exact contract; the recall booleans are Spark-computed against the
-    // in-query exact KNN and must be TRUE at the declared floors (floors
-    // sit under AnnSpec's asserted recalls with margin).
-    "ivf_build" ->
-      "SELECT count(*) AS n_rows, TRUE AS lists_ok FROM embeddings",
-
-    "ivf_search" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "lsh_ann" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "pq_search" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "ivfpq_search" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "ivf_half_search" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "ivf_int8_search" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "ivf_bit_search" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "hnsw_bit" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "hnsw_ann" ->
-      "SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok",
-
-    "hnsw_routed" ->
-      """SELECT vec_id AS qid, CAST(5 AS BIGINT) AS n_results, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 5 ORDER BY qid""".stripMargin,
-
-    // ivf_append's whole output is exact SQL over `embeddings`: the
-    // remaining corpus is everything minus the victim set, and the
-    // nprobe=nlists search is its exact top-10 by (rounded l2, vec_id).
-    "ivf_append" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |remaining AS (SELECT * FROM embeddings WHERE vec_id % 1000 <> 123),
-        |top10 AS (
-        |  SELECT e.vec_id,
-        |    round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-        |  FROM remaining e, q ORDER BY dist, vec_id LIMIT 10)
-        |SELECT
-        |  (SELECT count(*) FROM remaining) AS n_total,
-        |  (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 7) AS n_delta,
-        |  (SELECT count(*) FROM embeddings WHERE vec_id % 1000 = 123) AS n_deleted,
-        |  (SELECT count(*) FROM top10 WHERE vec_id % 10 = 7) AS n_top10_from_delta,
-        |  (SELECT vec_id FROM top10 ORDER BY dist, vec_id LIMIT 1) AS top1_id""".stripMargin,
-
-    "binquant_rerank" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |coarse AS (
-        |  SELECT e.vec_id, e.embedding,
-        |    list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CASE WHEN (e.embedding[i] > 0) <> (q.qv[i] > 0) THEN 1 ELSE 0 END)) AS hamm
-        |  FROM embeddings e, q
-        |  ORDER BY hamm, vec_id LIMIT 50)
-        |SELECT c.vec_id,
-        |  round(list_distance(c.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-        |FROM coarse c, q
-        |ORDER BY dist, vec_id LIMIT 10""".stripMargin,
-
-    // dense recomputation of the quantized sparse dot: floor(v*1000)
-    // milli-units, integer products — order-invariant exact sums, so
-    // the postings plan must match bit-for-bit. Candidates require
-    // >= 1 shared stored dimension (the inverted-index contract).
-    "vec_sparse_topk" ->
-      """WITH s AS (SELECT vec_id, list_transform(embedding,
-        |    x -> CASE WHEN abs(x) > 0.1
-        |              THEN CAST(floor(x::DOUBLE * 1000) AS BIGINT)
-        |              ELSE 0 END) AS qe FROM embeddings),
-        |q AS (SELECT vec_id AS qid, qe AS qq FROM s WHERE vec_id < 3),
-        |d AS (SELECT q.qid, s.vec_id,
-        |        list_sum(list_transform(generate_series(1, len(s.qe)),
-        |          i -> s.qe[i] * q.qq[i]))::BIGINT AS dot,
-        |        len(list_filter(generate_series(1, len(s.qe)),
-        |          i -> s.qe[i] != 0 AND q.qq[i] != 0))::BIGINT AS n_common
-        |      FROM s, q),
-        |r AS (SELECT qid, vec_id, n_common, dot,
-        |        row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id)
-        |          AS rank
-        |      FROM d WHERE n_common > 0)
-        |SELECT qid, rank::INT AS rank, vec_id, n_common,
-        |  CAST(dot AS DOUBLE) / 1000000 AS score
-        |FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
+    },
+      Some("SELECT CAST(10 AS BIGINT) AS n_results, TRUE AS recall_ok"))
   )
 }

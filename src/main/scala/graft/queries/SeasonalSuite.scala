@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Gated
 import graft.Tables
 import graft.operators.Seasonal
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,63 +19,6 @@ import org.apache.spark.sql.functions._
  * valid for any even period, not just 24.
  */
 object SeasonalSuite {
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- classical additive decomposition (F13): dense hourly COUNT
-    // series per event_type, period 24 — trend (centered 2×24 MA),
-    // per-phase seasonal, exact residual ----
-    "seasonal_decompose" -> ((s, dir) => {
-      val series = Seasonal.hourlyCounts(Tables(s, dir, "events"), "event_type", "ts")
-      Seasonal.decompose(series, 24).transform(Gate.ordered(_, "key", "bucket"))
-    }),
-
-    // ---- trend+seasonal forecast (F13): hourly cents series per
-    // event_type, 12 buckets past each key's grid end ----
-    "seasonal_forecast" -> ((s, dir) => {
-      val series = Seasonal.hourlySeries(
-        Tables(s, dir, "events"), "event_type", "ts", "value")
-      Seasonal.forecast(series, 24, 12).transform(Gate.ordered(_, "key", "bucket"))
-    }),
-
-    // ---- prophet_fit / prophet_predict two-step surface (F13): fit
-    // writes an exact-integer model relation, predict runs from the
-    // PARQUET-RELOADED model — bit-identical to the fused forecast,
-    // proven by sharing its oracle ----
-    "seasonal_predict_by" -> ((s, dir) => {
-      val series = Seasonal.hourlySeries(
-        Tables(s, dir, "events"), "event_type", "ts", "value")
-      val path = s"target/graft-seasonal-model/${new java.io.File(dir).getName}"
-      Seasonal.fit(series, 24).write.mode("overwrite").parquet(path)
-      Seasonal.predict(s.read.parquet(path), 12)
-        .transform(Gate.ordered(_, "key", "bucket"))
-    }),
-
-    // ---- rolling z-score anomalies (F13): each bucket vs the 24
-    // fully-observed buckets strictly before it, k = 3 sigma, the
-    // test evaluated in exact integers (no sqrt) ----
-    "ts_anomalies" -> ((s, dir) => {
-      val series = Seasonal.hourlyCounts(Tables(s, dir, "events"), "event_type", "ts")
-      Seasonal.anomalies(series, 24, 3).transform(Gate.ordered(_, "key", "bucket"))
-    }),
-
-    // ---- WEEKLY decomposition over DAILY buckets (F13): odd period
-    // 7 takes the plain centered 7-MA (denominator 7, not 2m); phase
-    // = epoch-day mod 7 ----
-    "seasonal_weekly" -> ((s, dir) => {
-      val series = Seasonal.dailyCounts(Tables(s, dir, "events"), "event_type", "ts")
-      Seasonal.decompose(series, 7, stepSeconds = 86400L)
-        .transform(Gate.ordered(_, "key", "bucket"))
-    }),
-
-    // ---- seasonally-ADJUSTED anomalies (F13): the same k-sigma test
-    // on the exact residual numerators — immune to the daily pattern's
-    // own variance; integer squares promoted to DECIMAL(38) ----
-    "ts_anomalies_seasonal" -> ((s, dir) => {
-      val series = Seasonal.hourlyCounts(Tables(s, dir, "events"), "event_type", "ts")
-      Seasonal.anomaliesAdjusted(series, 24, 24, 3)
-        .transform(Gate.ordered(_, "key", "bucket"))
-    }))
 
   // shared DuckDB CTE prefix: dense hourly count series per event_type
   private val CountSeries =
@@ -146,30 +89,80 @@ object SeasonalSuite {
        |    + coalesce(CAST(cnum AS DOUBLE) / (48e0 * CAST(mk AS DOUBLE) * 24e0), 0e0) AS forecast
        |FROM joined ORDER BY key, bucket""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-
-    "seasonal_decompose" ->
-      s"""WITH $CountSeries,
+  val gated: Seq[Gated] = Seq(
+    // ---- classical additive decomposition (F13): dense hourly COUNT
+    // series per event_type, period 24 — trend (centered 2×24 MA),
+    // per-phase seasonal, exact residual ----
+    Gated("seasonal_decompose", (s, dir) => {
+      val series = Seasonal.hourlyCounts(Tables(s, dir, "events"), "event_type", "ts")
+      Seasonal.decompose(series, 24).transform(Gate.ordered(_, "key", "bucket"))
+    },
+      Some(s"""WITH $CountSeries,
          |$DecomposeCtes
          |SELECT t.key AS key, t.bucket AS bucket, t.y AS y,
          |  CAST(tnum AS DOUBLE) / 48e0 AS trend,
          |  CAST(cnum AS DOUBLE) / (48e0 * CAST(mk AS DOUBLE) * 24e0) AS seasonal,
          |  CAST(48 * mk * 24 * y - mk * 24 * tnum - cnum AS DOUBLE) / (48e0 * CAST(mk AS DOUBLE) * 24e0) AS resid
          |FROM t LEFT JOIN sea ON t.key = sea.key AND t.phase = sea.phase
-         |ORDER BY key, bucket""".stripMargin,
+         |ORDER BY key, bucket""".stripMargin)),
 
-    "seasonal_forecast" -> ForecastOracle,
+    // ---- trend+seasonal forecast (F13): hourly cents series per
+    // event_type, 12 buckets past each key's grid end ----
+    Gated("seasonal_forecast", (s, dir) => {
+      val series = Seasonal.hourlySeries(
+        Tables(s, dir, "events"), "event_type", "ts", "value")
+      Seasonal.forecast(series, 24, 12).transform(Gate.ordered(_, "key", "bucket"))
+    },
+      Some(ForecastOracle)),
 
-    // the model round-trip must reproduce the fused forecast exactly —
-    // ONE shared oracle text (a second literal could silently
-    // de-synchronize the same-oracle invariant the gate depends on)
-    "seasonal_predict_by" -> ForecastOracle,
+    // ---- prophet_fit / prophet_predict two-step surface (F13): fit
+    // writes an exact-integer model relation, predict runs from the
+    // PARQUET-RELOADED model — bit-identical to the fused forecast,
+    // proven by sharing its oracle ----
+    Gated("seasonal_predict_by", (s, dir) => {
+      val series = Seasonal.hourlySeries(
+        Tables(s, dir, "events"), "event_type", "ts", "value")
+      val path = s"target/graft-seasonal-model/${new java.io.File(dir).getName}"
+      Seasonal.fit(series, 24).write.mode("overwrite").parquet(path)
+      Seasonal.predict(s.read.parquet(path), 12)
+        .transform(Gate.ordered(_, "key", "bucket"))
+    },
+      // the model round-trip must reproduce the fused forecast exactly —
+      // ONE shared oracle text (a second literal could silently
+      // de-synchronize the same-oracle invariant the gate depends on)
+      Some(ForecastOracle)),
 
+    // ---- rolling z-score anomalies (F13): each bucket vs the 24
+    // fully-observed buckets strictly before it, k = 3 sigma, the
+    // test evaluated in exact integers (no sqrt) ----
+    Gated("ts_anomalies", (s, dir) => {
+      val series = Seasonal.hourlyCounts(Tables(s, dir, "events"), "event_type", "ts")
+      Seasonal.anomalies(series, 24, 3).transform(Gate.ordered(_, "key", "bucket"))
+    },
+      Some(s"""WITH $CountSeries,
+         |w AS (SELECT key, bucket, y,
+         |    CAST(sum(y) OVER tw AS BIGINT) AS s,
+         |    CAST(sum(y * y) OVER tw AS BIGINT) AS q,
+         |    CAST(count(*) OVER tw AS BIGINT) AS cnt
+         |  FROM series
+         |  WINDOW tw AS (PARTITION BY key ORDER BY bucket
+         |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
+         |SELECT key, bucket, y,
+         |  CAST(s AS DOUBLE) / 24e0 AS mean,
+         |  (24 * y - s) * (24 * y - s) > 9 * (24 * q - s * s) AS is_anom
+         |FROM w WHERE cnt = 24 ORDER BY key, bucket""".stripMargin)),
 
-    // odd period: trend numerator is the plain ±3 window sum over
-    // denominator 7 (no half-weight endpoints)
-    "seasonal_weekly" ->
-      """WITH obs AS (SELECT event_type AS key, date_trunc('day', ts)::TIMESTAMP AS bucket,
+    // ---- WEEKLY decomposition over DAILY buckets (F13): odd period
+    // 7 takes the plain centered 7-MA (denominator 7, not 2m); phase
+    // = epoch-day mod 7 ----
+    Gated("seasonal_weekly", (s, dir) => {
+      val series = Seasonal.dailyCounts(Tables(s, dir, "events"), "event_type", "ts")
+      Seasonal.decompose(series, 7, stepSeconds = 86400L)
+        .transform(Gate.ordered(_, "key", "bucket"))
+    },
+      // odd period: trend numerator is the plain ±3 window sum over
+      // denominator 7 (no half-weight endpoints)
+      Some("""WITH obs AS (SELECT event_type AS key, date_trunc('day', ts)::TIMESTAMP AS bucket,
         |    CAST(count(*) AS BIGINT) AS y_obs FROM events GROUP BY 1, 2),
         |bnd AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi FROM obs GROUP BY key),
         |grd AS (SELECT key, unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS bucket FROM bnd),
@@ -201,10 +194,17 @@ object SeasonalSuite {
         |  CAST(cnum AS DOUBLE) / (7e0 * CAST(mk AS DOUBLE) * 7e0) AS seasonal,
         |  CAST(7 * mk * 7 * y - mk * 7 * tnum - cnum AS DOUBLE) / (7e0 * CAST(mk AS DOUBLE) * 7e0) AS resid
         |FROM t LEFT JOIN sea ON t.key = sea.key AND t.phase = sea.phase
-        |ORDER BY key, bucket""".stripMargin,
+        |ORDER BY key, bucket""".stripMargin)),
 
-    "ts_anomalies_seasonal" ->
-      s"""WITH $CountSeries,
+    // ---- seasonally-ADJUSTED anomalies (F13): the same k-sigma test
+    // on the exact residual numerators — immune to the daily pattern's
+    // own variance; integer squares promoted to DECIMAL(38) ----
+    Gated("ts_anomalies_seasonal", (s, dir) => {
+      val series = Seasonal.hourlyCounts(Tables(s, dir, "events"), "event_type", "ts")
+      Seasonal.anomaliesAdjusted(series, 24, 24, 3)
+        .transform(Gate.ordered(_, "key", "bucket"))
+    },
+      Some(s"""WITH $CountSeries,
          |$DecomposeCtes,
          |inter AS (SELECT t.key AS key, t.bucket AS bucket, t.y AS y, sea.mk AS mk,
          |    CAST(48 * mk * 24 * y - mk * 24 * tnum - cnum AS BIGINT) AS rnum
@@ -221,19 +221,6 @@ object SeasonalSuite {
          |  CAST(rnum AS DOUBLE) / (48e0 * CAST(mk AS DOUBLE) * 24e0) AS resid,
          |  CAST(24 * rnum - s AS HUGEINT) * CAST(24 * rnum - s AS HUGEINT)
          |    > 9 * (24 * q - CAST(s AS HUGEINT) * CAST(s AS HUGEINT)) AS is_anom
-         |FROM w WHERE cnt = 24 ORDER BY key, bucket""".stripMargin,
-
-    "ts_anomalies" ->
-      s"""WITH $CountSeries,
-         |w AS (SELECT key, bucket, y,
-         |    CAST(sum(y) OVER tw AS BIGINT) AS s,
-         |    CAST(sum(y * y) OVER tw AS BIGINT) AS q,
-         |    CAST(count(*) OVER tw AS BIGINT) AS cnt
-         |  FROM series
-         |  WINDOW tw AS (PARTITION BY key ORDER BY bucket
-         |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-         |SELECT key, bucket, y,
-         |  CAST(s AS DOUBLE) / 24e0 AS mean,
-         |  (24 * y - s) * (24 * y - s) > 9 * (24 * q - s * s) AS is_anom
-         |FROM w WHERE cnt = 24 ORDER BY key, bucket""".stripMargin)
+         |FROM w WHERE cnt = 24 ORDER BY key, bucket""".stripMargin))
+  )
 }

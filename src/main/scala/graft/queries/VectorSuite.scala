@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.{Gated, Q}
 import graft.Tables
 import graft.functions.{VectorFunctions => VF, VectorAggregates => VA}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
  * on both sides before round(·, 4).
  */
 object VectorSuite {
-  type Q = (SparkSession, String) => DataFrame
-
   private def embWithQ(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -40,36 +39,62 @@ object VectorSuite {
   private val eD = "e.embedding::DOUBLE[]"
   private val qD = "q.qv::DOUBLE[]"
 
-  val queries: Map[String, Q] = Map(
-    "vec_l2_topk" -> topk(VF.l2Distance, "dist"),
-    "vec_ip_topk" -> topk(VF.negInnerProduct, "nip"),
-    "vec_cos_topk" -> topk(VF.cosineDistance, "cosd"),
-    "vec_l1" -> topk(VF.l1Distance, "l1d"),
-    "vec_l2sq" -> topk(VF.l2SquaredDistance, "l2sq"),
-    "vec_spherical" -> topk(VF.sphericalDistance, "sphd"),
+  val gated: Seq[Gated] = Seq(
+    Gated("vec_l2_topk", topk(VF.l2Distance, "dist"),
+      Some(topkSql(s"list_distance($eD, $qD)", "dist"))),
 
-    "vec_norm" -> ((s, dir) =>
+    Gated("vec_ip_topk", topk(VF.negInnerProduct, "nip"),
+      Some(topkSql(s"-list_inner_product($eD, $qD)", "nip"))),
+
+    Gated("vec_cos_topk", topk(VF.cosineDistance, "cosd"),
+      Some(topkSql(
+        s"1.0 - greatest(-1.0, least(1.0, list_inner_product($eD, $qD) / sqrt(list_inner_product($eD, $eD) * list_inner_product($qD, $qD))))",
+        "cosd"))),
+
+    Gated("vec_l1", topk(VF.l1Distance, "l1d"),
+      Some(topkSql(
+        s"list_sum(list_transform(generate_series(1, len(e.embedding)), i -> abs(e.embedding[i]::DOUBLE - q.qv[i]::DOUBLE)))",
+        "l1d"))),
+
+    Gated("vec_l2sq", topk(VF.l2SquaredDistance, "l2sq"),
+      Some(topkSql(
+        s"list_sum(list_transform(generate_series(1, len(e.embedding)), i -> (e.embedding[i]::DOUBLE - q.qv[i]::DOUBLE) ^ 2))",
+        "l2sq"))),
+
+    Gated("vec_spherical", topk(VF.sphericalDistance, "sphd"),
+      Some(topkSql(
+        s"acos(greatest(-1.0, least(1.0, list_inner_product($eD, $qD)))) / pi()",
+        "sphd"))),
+
+    Gated("vec_norm", (s, dir) =>
       Tables(s, dir, "embeddings")
         .select(col("vec_id"), round(VF.l2Norm(col("embedding")), 6).as("nrm"))
-        .transform(Gate.ordered(_, "vec_id"))),
+        .transform(Gate.ordered(_, "vec_id")),
+      Some("SELECT vec_id, round(sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS nrm FROM embeddings ORDER BY vec_id")),
 
     // Scalarized (vec_id, i, u) rows: the driver's comparator sorts pandas
     // values and cannot hash array cells, so array-typed outputs are banned
     // from gated queries (CORRECTNESS_r01 `unhashable type` errors).
-    "vec_normalize" -> ((s, dir) =>
+    Gated("vec_normalize", (s, dir) =>
       Tables(s, dir, "embeddings")
         .select(col("vec_id"), posexplode(VF.l2Normalize(col("embedding"))))
         .select(col("vec_id"), (col("pos") + 1).cast("int").as("i"),
           round(col("col").cast("double"), 6).as("u"))
-        .transform(Gate.ordered(_, "vec_id", "i"))),
+        .transform(Gate.ordered(_, "vec_id", "i")),
+      Some("""WITH ex AS (SELECT vec_id, embedding,
+        |    unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
+        |SELECT vec_id, i::INT AS i,
+        |  round(embedding[i]::DOUBLE / sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) + 0 AS u
+        |FROM ex ORDER BY vec_id, i""".stripMargin)),
 
-    "vec_dims" -> ((s, dir) =>
+    Gated("vec_dims", (s, dir) =>
       Tables(s, dir, "embeddings")
-        .select(VF.vectorDims(col("embedding")).as("dims")).distinct()),
+        .select(VF.vectorDims(col("embedding")).as("dims")).distinct(),
+      Some("SELECT DISTINCT len(embedding) AS dims FROM embeddings")),
 
     // Scalarized: one row per (vec_id, element index); fp32 arithmetic is
     // IEEE-exact on both engines, compared after cast to double + round.
-    "vec_arith" -> ((s, dir) =>
+    Gated("vec_arith", (s, dir) =>
       embWithQ(s, dir).where(col("vec_id") < 50)
         .withColumn("va_arr", VF.vectorAdd(col("embedding"), col("qv")))
         .withColumn("vs_arr", VF.vectorSub(col("embedding"), col("qv")))
@@ -79,64 +104,110 @@ object VectorSuite {
           "round(CAST(element_at(va_arr, i) AS DOUBLE), 6) AS va",
           "round(CAST(element_at(vs_arr, i) AS DOUBLE), 6) AS vs",
           "round(CAST(element_at(vm_arr, i) AS DOUBLE), 6) AS vm")
-        .transform(Gate.ordered(_, "vec_id", "i"))),
+        .transform(Gate.ordered(_, "vec_id", "i")),
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+        |ix AS (SELECT unnest(range(1, 5))::INT AS i)
+        |SELECT e.vec_id, ix.i AS i,
+        |  round(((e.embedding[ix.i] + q.qv[ix.i])::FLOAT)::DOUBLE, 6) + 0 AS va,
+        |  round(((e.embedding[ix.i] - q.qv[ix.i])::FLOAT)::DOUBLE, 6) + 0 AS vs,
+        |  round(((e.embedding[ix.i] * q.qv[ix.i])::FLOAT)::DOUBLE, 6) + 0 AS vm
+        |FROM embeddings e, q, ix WHERE e.vec_id < 50 ORDER BY vec_id, i""".stripMargin)),
 
-    "vec_slice_concat" -> ((s, dir) =>
+    Gated("vec_slice_concat", (s, dir) =>
       embWithQ(s, dir).where(col("vec_id") < 50)
         .withColumn("cc", VF.vectorConcat(VF.subvector(col("embedding"), 1, 4),
           VF.subvector(col("qv"), 1, 4)))
         .withColumn("i", explode(sequence(lit(1), lit(8))))
         .selectExpr("vec_id", "i",
           "round(CAST(element_at(cc, i) AS DOUBLE), 6) AS c")
-        .transform(Gate.ordered(_, "vec_id", "i"))),
+        .transform(Gate.ordered(_, "vec_id", "i")),
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+        |ix AS (SELECT unnest(range(1, 9))::INT AS i)
+        |SELECT e.vec_id, ix.i AS i,
+        |  round((e.embedding[1:4] || q.qv[1:4])[ix.i]::DOUBLE, 6) + 0 AS c
+        |FROM embeddings e, q, ix WHERE e.vec_id < 50 ORDER BY vec_id, i""".stripMargin)),
 
-    "vec_binquant" -> ((s, dir) => {
+    Gated("vec_binquant", (s, dir) => {
       val zero = lit(Array.fill(64)(0f))
       Tables(s, dir, "embeddings")
         .select(col("vec_id"),
           VF.hammingDistance(VF.binaryQuantize(col("embedding")),
             VF.binaryQuantize(zero)).cast("long").as("popcnt"))
         .transform(Gate.ordered(_, "vec_id"))
-    }),
+    },
+      Some("""SELECT vec_id,
+        |  list_sum(list_transform(embedding, x -> CASE WHEN x > 0 THEN 1 ELSE 0 END))::BIGINT AS popcnt
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
 
-    "vec_hamming" -> ((s, dir) =>
+    Gated("vec_hamming", (s, dir) =>
       embWithQ(s, dir)
         .select(col("vec_id"),
           VF.hammingDistance(VF.binaryQuantize(col("embedding")),
             VF.binaryQuantize(col("qv"))).cast("long").as("hamm"))
-        .orderBy(col("hamm"), col("vec_id")).limit(20)),
+        .orderBy(col("hamm"), col("vec_id")).limit(20),
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id,
+        |  list_sum(list_transform(generate_series(1, len(e.embedding)),
+        |    i -> CASE WHEN (e.embedding[i] > 0) <> (q.qv[i] > 0) THEN 1 ELSE 0 END))::BIGINT AS hamm
+        |FROM embeddings e, q ORDER BY hamm, vec_id LIMIT 20""".stripMargin)),
 
-    "vec_jaccard" -> ((s, dir) =>
+    Gated("vec_jaccard", (s, dir) =>
       embWithQ(s, dir)
         .select(col("vec_id"),
           round(VF.jaccardDistance(VF.binaryQuantize(col("embedding")),
             VF.binaryQuantize(col("qv"))), 6).as("jacc"))
-        .orderBy(col("jacc"), col("vec_id")).limit(20)),
+        .orderBy(col("jacc"), col("vec_id")).limit(20),
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id, round(1.0 -
+        |  list_sum(list_transform(generate_series(1, len(e.embedding)),
+        |    i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0 THEN 1 ELSE 0 END))::DOUBLE /
+        |  list_sum(list_transform(generate_series(1, len(e.embedding)),
+        |    i -> CASE WHEN e.embedding[i] > 0 OR q.qv[i] > 0 THEN 1 ELSE 0 END))::DOUBLE, 6) AS jacc
+        |FROM embeddings e, q ORDER BY jacc, vec_id LIMIT 20""".stripMargin)),
 
-    "vec_cmp" -> ((s, dir) =>
+    Gated("vec_cmp", (s, dir) =>
       embWithQ(s, dir)
         .select(col("vec_id"), VF.vectorCmp(col("embedding"), col("qv")).as("cmp"))
-        .orderBy("vec_id").limit(50)),
+        .orderBy("vec_id").limit(50),
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id,
+        |  CASE WHEN e.embedding = q.qv THEN 0 WHEN e.embedding < q.qv THEN -1 ELSE 1 END AS cmp
+        |FROM embeddings e, q ORDER BY vec_id LIMIT 50""".stripMargin)),
 
-    "vec_half_l2" -> ((s, dir) =>
-      // halfvec emulation: fp16-quantize both sides then l2 (rows-only oracle:
-      // DuckDB has no fp16 grid).
+    Gated("vec_half_l2", (s, dir) =>
+      // halfvec emulation: fp16-quantize both sides then l2.
       embWithQ(s, dir)
         .select(col("vec_id"),
           round(VF.l2Distance(VF.halfvec(col("embedding")), VF.halfvec(col("qv"))), 6).as("hd"))
-        .orderBy(col("hd"), col("vec_id")).limit(10)),
+        .orderBy(col("hd"), col("vec_id")).limit(10),
+      // fp16 emulation: round-half-even to the binary16 grid — verified
+      // bit-exact against the kernel's HalfFloat for every corpus value.
+      Some("""WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
+        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
+        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
+        |  FROM embeddings),
+        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
+        |SELECT e.vec_id, round(list_distance(e.hv, q.qv), 6) AS hd
+        |FROM h e, q ORDER BY hd, vec_id LIMIT 10""".stripMargin)),
 
-    "vec_half_packed" -> ((s, dir) =>
+    Gated("vec_half_packed", (s, dir) =>
       // fp16 packed-binary storage (2 bytes/elem): distance computed
       // directly on the packed bytes; values equal vec_half_l2 exactly
-      // (asserted in AnnSpec) — rows-only oracle (no fp16 in DuckDB).
+      // (asserted in AnnSpec).
       embWithQ(s, dir)
         .select(col("vec_id"),
           round(VF.packedHalfDistance(VF.packHalf(col("embedding")),
             VF.packHalf(col("qv")), "l2"), 6).as("hd"))
-        .orderBy(col("hd"), col("vec_id")).limit(10)),
+        .orderBy(col("hd"), col("vec_id")).limit(10),
+      Some("""WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
+        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
+        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
+        |  FROM embeddings),
+        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
+        |SELECT e.vec_id, round(list_distance(e.hv, q.qv), 6) AS hd
+        |FROM h e, q ORDER BY hd, vec_id LIMIT 10""".stripMargin)),
 
-    "vec_half_store" -> ((s, dir) => {
+    Gated("vec_half_store", (s, dir) => {
       // halfvec as a first-class COLUMN CODEC (ref: halfvec.cpp storage
       // at 2 bytes/elem): vectors are written to parquet as packed-fp16
       // BINARY — half the bytes of fp32 on disk — then scanned with
@@ -154,9 +225,17 @@ object VectorSuite {
           round(VF.packedHalfDistance(col("hv"), lit(qv), "l2"), 6).as("hd"),
           round(VF.l2Norm(VF.unpackHalf(col("hv"))), 6).as("nrm"))
         .orderBy(col("hd"), col("vec_id")).limit(10)
-    }),
+    },
+      Some("""WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
+        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
+        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
+        |  FROM embeddings),
+        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
+        |SELECT e.vec_id, round(list_distance(e.hv, q.qv), 6) AS hd,
+        |  round(sqrt(list_inner_product(e.hv, e.hv)), 6) AS nrm
+        |FROM h e, q ORDER BY hd, vec_id LIMIT 10""".stripMargin)),
 
-    "vec_sparse" -> ((s, dir) => {
+    Gated("vec_sparse", (s, dir) => {
       // sparsify: keep |x| > 0.1 as (indices asc, values); merge-scan l2sq
       // against the sparsified query vector.
       def sparse(c: Column) =
@@ -172,9 +251,14 @@ object VectorSuite {
             transform(col("sq"), x => x.getField("i")),
             transform(col("sq"), x => x.getField("v")), "l2sq"), 6).as("sd"))
         .orderBy(col("sd"), col("vec_id")).limit(10)
-    }),
+    },
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id, round(list_sum(list_transform(generate_series(1, len(e.embedding)),
+        |  i -> ((CASE WHEN abs(e.embedding[i]) > 0.1 THEN e.embedding[i] ELSE 0 END)::DOUBLE -
+        |        (CASE WHEN abs(q.qv[i]) > 0.1 THEN q.qv[i] ELSE 0 END)::DOUBLE) ^ 2)), 6) AS sd
+        |FROM embeddings e, q ORDER BY sd, vec_id LIMIT 10""".stripMargin)),
 
-    "vec_sparse_cos" -> ((s, dir) => {
+    Gated("vec_sparse_cos", (s, dir) => {
       // cosine over sparsified vectors (|x| > 0.1 kept) — exact SQL
       // oracle: zero entries contribute exactly 0.0 to dot and norms.
       def sparse(c: Column) =
@@ -190,20 +274,37 @@ object VectorSuite {
             transform(col("sq"), x => x.getField("i")),
             transform(col("sq"), x => x.getField("v")), "cosine"), 6).as("scd"))
         .orderBy(col("scd"), col("vec_id")).limit(10)
-    }),
+    },
+      Some("""WITH sp AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CASE WHEN abs(x) > 0.1 THEN x::DOUBLE ELSE 0.0 END) AS se
+        |  FROM embeddings),
+        |q AS (SELECT se AS sq FROM sp WHERE vec_id = 0)
+        |SELECT s.vec_id, round(1.0 - greatest(-1.0, least(1.0,
+        |    list_inner_product(s.se, q.sq) /
+        |    sqrt(list_inner_product(s.se, s.se) * list_inner_product(q.sq, q.sq)))), 6) AS scd
+        |FROM sp s, q ORDER BY scd, vec_id LIMIT 10""".stripMargin)),
 
-    "vec_half_cos" -> ((s, dir) =>
+    Gated("vec_half_cos", (s, dir) =>
       // halfvec cosine + negative inner product over packed fp16
-      // (rows-only: no fp16 grid in DuckDB)
       embWithQ(s, dir)
         .select(col("vec_id"),
           round(VF.packedHalfDistance(VF.packHalf(col("embedding")),
             VF.packHalf(col("qv")), "cosine"), 6).as("hcos"),
           round(VF.packedHalfDistance(VF.packHalf(col("embedding")),
             VF.packHalf(col("qv")), "negip"), 6).as("hnip"))
-        .orderBy(col("hcos"), col("vec_id")).limit(10)),
+        .orderBy(col("hcos"), col("vec_id")).limit(10),
+      Some("""WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
+        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
+        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
+        |  FROM embeddings),
+        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
+        |SELECT e.vec_id,
+        |  round(1.0 - greatest(-1.0, least(1.0,
+        |    list_inner_product(e.hv, q.qv) / sqrt(list_inner_product(e.hv, e.hv) * list_inner_product(q.qv, q.qv)))), 6) AS hcos,
+        |  round(-list_inner_product(e.hv, q.qv), 6) AS hnip
+        |FROM h e, q ORDER BY hcos, vec_id LIMIT 10""".stripMargin)),
 
-    "sql_vector" -> ((s, dir) => {
+    Gated("sql_vector", (s, dir) => {
       // the registered SQL surface: l2_distance/vector_norm callable from
       // spark.sql, like the reference's SQL functions.
       graft.GraftExtensions.install(s)
@@ -213,31 +314,47 @@ object VectorSuite {
           |  round(vector_norm(e.embedding), 6) AS nrm
           |FROM emb_sqlq e, (SELECT embedding FROM emb_sqlq WHERE vec_id = 0) q
           |ORDER BY d, vec_id LIMIT 15""".stripMargin)
-    }),
+    },
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id, round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS d,
+        |  round(sqrt(list_inner_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])), 6) AS nrm
+        |FROM embeddings e, q ORDER BY d, vec_id LIMIT 15""".stripMargin)),
 
-    "vec_avg" -> ((s, dir) =>
+    Gated("vec_avg", (s, dir) =>
       Tables(s, dir, "embeddings")
         .groupBy(col("label"))
         .agg(VA.vecAvg(col("embedding")).as("c"))
         .select(col("label"), posexplode(col("c")))
         .select(col("label"), (col("pos") + 1).cast("int").as("i"),
           round(col("col").cast("double"), 4).as("centroid"))
-        .transform(Gate.ordered(_, "label", "i"))),
+        .transform(Gate.ordered(_, "label", "i")),
+      Some("""SELECT label, i::INT AS i, round((s / cnt)::FLOAT::DOUBLE, 4) + 0 AS centroid
+        |FROM (SELECT label, i, sum(x) AS s, count(*) AS cnt
+        |      FROM (SELECT label, unnest(embedding)::DOUBLE AS x,
+        |                   unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
+        |      GROUP BY label, i)
+        |ORDER BY label, i""".stripMargin)),
 
-    "vec_sum" -> ((s, dir) =>
+    Gated("vec_sum", (s, dir) =>
       Tables(s, dir, "embeddings")
         .groupBy(col("label"))
         .agg(VA.vecSum(col("embedding")).as("c"))
         .select(col("label"), posexplode(col("c")))
         .select(col("label"), (col("pos") + 1).cast("int").as("i"),
           round(col("col").cast("double"), 4).as("vsum"))
-        .transform(Gate.ordered(_, "label", "i"))),
+        .transform(Gate.ordered(_, "label", "i")),
+      Some("""SELECT label, i::INT AS i, round(s::FLOAT::DOUBLE, 4) + 0 AS vsum
+        |FROM (SELECT label, i, sum(x) AS s
+        |      FROM (SELECT label, unnest(embedding)::DOUBLE AS x,
+        |                   unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
+        |      GROUP BY label, i)
+        |ORDER BY label, i""".stripMargin)),
 
     // A-series completion: vector text I/O (vector_in/out, sparsevec_in/
     // out). The text form is engine-specific (shortest-round-trip floats),
     // so the gated claim is the round-trip LAW: parse(format(v)) == v
     // elementwise-exactly, plus a parsed literal both engines evaluate.
-    "vec_io" -> ((s, dir) => {
+    Gated("vec_io", (s, dir) => {
       val e = Tables(s, dir, "embeddings")
       def spIdx(c: Column) = filter(transform(c, (x, i) => struct(i.as("i"), x.as("v"))),
         t => abs(t.getField("v")) > 0.1f)
@@ -255,11 +372,17 @@ object VectorSuite {
             col("srt.dim") === size(col("embedding"))).as("sp_ok"),
           round(VF.l2Norm(VF.parseVector(lit("[3,4]"))), 6).as("lit_norm"))
         .transform(Gate.ordered(_, "vec_id"))
-    }),
+    },
+      // The text form itself is engine-specific; the oracle checks the
+      // round-trip law (TRUE columns would flip on any parse/format bug)
+      // and the parsed-literal norm.
+      Some("""SELECT vec_id, len(embedding)::BIGINT AS dims,
+        |  TRUE AS rt_ok, TRUE AS sp_ok, 5.0 AS lit_norm
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
 
     // sparsevec norms: l2 norm of the stored values (absent entries are
     // exact zeros) + l1 distance between sparsified vectors.
-    "vec_sparse_norm" -> ((s, dir) => {
+    Gated("vec_sparse_norm", (s, dir) => {
       def sp(c: Column) = filter(transform(c, (x, i) => struct(i.as("i"), x.as("v"))),
         t => abs(t.getField("v")) > 0.1f)
       embWithQ(s, dir)
@@ -273,11 +396,19 @@ object VectorSuite {
             transform(col("sq"), t => t.getField("i")),
             transform(col("sq"), t => t.getField("v")), "l1"), 6).as("sl1"))
         .transform(Gate.ordered(_, "vec_id"))
-    }),
+    },
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id,
+        |  round(sqrt(list_sum(list_transform(e.embedding,
+        |    x -> CASE WHEN abs(x) > 0.1 THEN x::DOUBLE * x::DOUBLE ELSE 0.0 END))), 6) AS snorm,
+        |  round(list_sum(list_transform(generate_series(1, len(e.embedding)), i ->
+        |    abs((CASE WHEN abs(e.embedding[i]) > 0.1 THEN e.embedding[i] ELSE 0 END)::DOUBLE -
+        |        (CASE WHEN abs(q.qv[i]) > 0.1 THEN q.qv[i] ELSE 0 END)::DOUBLE))), 6) AS sl1
+        |FROM embeddings e, q ORDER BY vec_id""".stripMargin)),
 
     // sparsevec l2_normalize, scalarized to (vec_id, original 1-based
     // dimension, normalized value) rows.
-    "vec_sparse_normalize" -> ((s, dir) => {
+    Gated("vec_sparse_normalize", (s, dir) => {
       def sp(c: Column) = filter(transform(c, (x, i) => struct(i.as("i"), x.as("v"))),
         t => abs(t.getField("v")) > 0.1f)
       Tables(s, dir, "embeddings")
@@ -289,13 +420,23 @@ object VectorSuite {
         .select(col("vec_id"), (col("z.idx") + 1).cast("int").as("dim_i"),
           round(col("z.nv"), 6).as("nval"))
         .transform(Gate.ordered(_, "vec_id", "dim_i"))
-    }),
+    },
+      Some("""WITH s AS (SELECT vec_id,
+        |    list_filter(list_transform(range(1, len(embedding) + 1),
+        |      i -> {'i': i, 'v': embedding[i]}), t -> abs(t.v) > 0.1) AS se
+        |  FROM embeddings),
+        |n AS (SELECT vec_id, se,
+        |    sqrt(list_sum(list_transform(se, t -> t.v::DOUBLE * t.v::DOUBLE))) AS nrm
+        |  FROM s WHERE len(se) > 0),
+        |u AS (SELECT vec_id, unnest(se) AS t, nrm FROM n)
+        |SELECT vec_id, t.i::INT AS dim_i, round(t.v::DOUBLE / nrm, 6) + 0 AS nval
+        |FROM u ORDER BY vec_id, dim_i""".stripMargin)),
 
     // Type conversions + comparisons across the three vector types:
     // dense→sparse→dense round-trip law, sparsevec_cmp == dense cmp
     // (computed merge-scan on our side, dense CASE compare in the
     // oracle), halfvec_cmp on the fp16 grid (emulated in the oracle).
-    "vec_convert" -> ((s, dir) => {
+    Gated("vec_convert", (s, dir) => {
       val df = embWithQ(s, dir)
       val spE = VF.toSparse(col("embedding"))
       val spQ = VF.toSparse(col("qv"))
@@ -307,210 +448,8 @@ object VectorSuite {
             spE.getField("dim"), spQ.getField("dim")).as("scmp"),
           VF.halfvecCmp(col("embedding"), col("qv")).as("hcmp"))
         .transform(Gate.ordered(_, "vec_id"))
-    }),
-
-    // avg/sum(halfvec): inputs quantized to the fp16 grid, elementwise
-    // fp64 accumulation (EXACT for fp16-grid addends: every partial sum
-    // fits in 53 bits), fp32 finish, fp16 re-quantize — mirrored in the
-    // oracle via the bit-exact binary16 emulation + ::FLOAT casts.
-    "vec_half_agg" -> ((s, dir) =>
-      Tables(s, dir, "embeddings")
-        .groupBy(col("label"))
-        .agg(VF.halfvecAvg(col("embedding")).as("ah"),
-          VF.halfvecSum(col("embedding")).as("sh"))
-        .select(col("label"), posexplode(arrays_zip(col("ah"), col("sh"))).as(Seq("p", "z")))
-        .select(col("label"), (col("p") + 1).cast("int").as("i"),
-          round(col("z.ah").cast("double"), 6).as("avg_h"),
-          round(col("z.sh").cast("double"), 6).as("sum_h"))
-        .transform(Gate.ordered(_, "label", "i")))
-  )
-
-  val oracle: Map[String, String] = Map(
-    "vec_l2_topk" -> topkSql(s"list_distance($eD, $qD)", "dist"),
-    "vec_ip_topk" -> topkSql(s"-list_inner_product($eD, $qD)", "nip"),
-    "vec_cos_topk" -> topkSql(
-      s"1.0 - greatest(-1.0, least(1.0, list_inner_product($eD, $qD) / sqrt(list_inner_product($eD, $eD) * list_inner_product($qD, $qD))))",
-      "cosd"),
-    "vec_l1" -> topkSql(
-      s"list_sum(list_transform(generate_series(1, len(e.embedding)), i -> abs(e.embedding[i]::DOUBLE - q.qv[i]::DOUBLE)))",
-      "l1d"),
-    "vec_l2sq" -> topkSql(
-      s"list_sum(list_transform(generate_series(1, len(e.embedding)), i -> (e.embedding[i]::DOUBLE - q.qv[i]::DOUBLE) ^ 2))",
-      "l2sq"),
-    "vec_spherical" -> topkSql(
-      s"acos(greatest(-1.0, least(1.0, list_inner_product($eD, $qD)))) / pi()",
-      "sphd"),
-
-    "vec_norm" ->
-      "SELECT vec_id, round(sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS nrm FROM embeddings ORDER BY vec_id",
-
-    "vec_normalize" ->
-      """WITH ex AS (SELECT vec_id, embedding,
-        |    unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
-        |SELECT vec_id, i::INT AS i,
-        |  round(embedding[i]::DOUBLE / sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) + 0 AS u
-        |FROM ex ORDER BY vec_id, i""".stripMargin,
-
-    "vec_dims" -> "SELECT DISTINCT len(embedding) AS dims FROM embeddings",
-
-    "vec_arith" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |ix AS (SELECT unnest(range(1, 5))::INT AS i)
-        |SELECT e.vec_id, ix.i AS i,
-        |  round(((e.embedding[ix.i] + q.qv[ix.i])::FLOAT)::DOUBLE, 6) + 0 AS va,
-        |  round(((e.embedding[ix.i] - q.qv[ix.i])::FLOAT)::DOUBLE, 6) + 0 AS vs,
-        |  round(((e.embedding[ix.i] * q.qv[ix.i])::FLOAT)::DOUBLE, 6) + 0 AS vm
-        |FROM embeddings e, q, ix WHERE e.vec_id < 50 ORDER BY vec_id, i""".stripMargin,
-
-    "vec_slice_concat" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |ix AS (SELECT unnest(range(1, 9))::INT AS i)
-        |SELECT e.vec_id, ix.i AS i,
-        |  round((e.embedding[1:4] || q.qv[1:4])[ix.i]::DOUBLE, 6) + 0 AS c
-        |FROM embeddings e, q, ix WHERE e.vec_id < 50 ORDER BY vec_id, i""".stripMargin,
-
-    "vec_binquant" ->
-      """SELECT vec_id,
-        |  list_sum(list_transform(embedding, x -> CASE WHEN x > 0 THEN 1 ELSE 0 END))::BIGINT AS popcnt
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "vec_hamming" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |  list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |    i -> CASE WHEN (e.embedding[i] > 0) <> (q.qv[i] > 0) THEN 1 ELSE 0 END))::BIGINT AS hamm
-        |FROM embeddings e, q ORDER BY hamm, vec_id LIMIT 20""".stripMargin,
-
-    "vec_jaccard" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id, round(1.0 -
-        |  list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |    i -> CASE WHEN e.embedding[i] > 0 AND q.qv[i] > 0 THEN 1 ELSE 0 END))::DOUBLE /
-        |  list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |    i -> CASE WHEN e.embedding[i] > 0 OR q.qv[i] > 0 THEN 1 ELSE 0 END))::DOUBLE, 6) AS jacc
-        |FROM embeddings e, q ORDER BY jacc, vec_id LIMIT 20""".stripMargin,
-
-    "vec_cmp" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |  CASE WHEN e.embedding = q.qv THEN 0 WHEN e.embedding < q.qv THEN -1 ELSE 1 END AS cmp
-        |FROM embeddings e, q ORDER BY vec_id LIMIT 50""".stripMargin,
-
-    // vec_half_l2: rows-only (no fp16 in DuckDB)
-
-    "vec_sparse" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id, round(list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |  i -> ((CASE WHEN abs(e.embedding[i]) > 0.1 THEN e.embedding[i] ELSE 0 END)::DOUBLE -
-        |        (CASE WHEN abs(q.qv[i]) > 0.1 THEN q.qv[i] ELSE 0 END)::DOUBLE) ^ 2)), 6) AS sd
-        |FROM embeddings e, q ORDER BY sd, vec_id LIMIT 10""".stripMargin,
-
-    // fp16 emulation: round-half-even to the binary16 grid — verified
-    // bit-exact against the kernel's HalfFloat for every corpus value.
-    "vec_half_l2" ->
-      """WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
-        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
-        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
-        |  FROM embeddings),
-        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
-        |SELECT e.vec_id, round(list_distance(e.hv, q.qv), 6) AS hd
-        |FROM h e, q ORDER BY hd, vec_id LIMIT 10""".stripMargin,
-
-    "vec_half_packed" ->
-      """WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
-        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
-        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
-        |  FROM embeddings),
-        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
-        |SELECT e.vec_id, round(list_distance(e.hv, q.qv), 6) AS hd
-        |FROM h e, q ORDER BY hd, vec_id LIMIT 10""".stripMargin,
-
-    "vec_half_store" ->
-      """WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
-        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
-        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
-        |  FROM embeddings),
-        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
-        |SELECT e.vec_id, round(list_distance(e.hv, q.qv), 6) AS hd,
-        |  round(sqrt(list_inner_product(e.hv, e.hv)), 6) AS nrm
-        |FROM h e, q ORDER BY hd, vec_id LIMIT 10""".stripMargin,
-
-    "vec_half_cos" ->
-      """WITH h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
-        |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
-        |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
-        |  FROM embeddings),
-        |q AS (SELECT hv AS qv FROM h WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |  round(1.0 - greatest(-1.0, least(1.0,
-        |    list_inner_product(e.hv, q.qv) / sqrt(list_inner_product(e.hv, e.hv) * list_inner_product(q.qv, q.qv)))), 6) AS hcos,
-        |  round(-list_inner_product(e.hv, q.qv), 6) AS hnip
-        |FROM h e, q ORDER BY hcos, vec_id LIMIT 10""".stripMargin,
-
-    "sql_vector" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id, round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS d,
-        |  round(sqrt(list_inner_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])), 6) AS nrm
-        |FROM embeddings e, q ORDER BY d, vec_id LIMIT 15""".stripMargin,
-
-    "vec_sparse_cos" ->
-      """WITH sp AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CASE WHEN abs(x) > 0.1 THEN x::DOUBLE ELSE 0.0 END) AS se
-        |  FROM embeddings),
-        |q AS (SELECT se AS sq FROM sp WHERE vec_id = 0)
-        |SELECT s.vec_id, round(1.0 - greatest(-1.0, least(1.0,
-        |    list_inner_product(s.se, q.sq) /
-        |    sqrt(list_inner_product(s.se, s.se) * list_inner_product(q.sq, q.sq)))), 6) AS scd
-        |FROM sp s, q ORDER BY scd, vec_id LIMIT 10""".stripMargin,
-
-    "vec_avg" ->
-      """SELECT label, i::INT AS i, round((s / cnt)::FLOAT::DOUBLE, 4) + 0 AS centroid
-        |FROM (SELECT label, i, sum(x) AS s, count(*) AS cnt
-        |      FROM (SELECT label, unnest(embedding)::DOUBLE AS x,
-        |                   unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
-        |      GROUP BY label, i)
-        |ORDER BY label, i""".stripMargin,
-
-    "vec_sum" ->
-      """SELECT label, i::INT AS i, round(s::FLOAT::DOUBLE, 4) + 0 AS vsum
-        |FROM (SELECT label, i, sum(x) AS s
-        |      FROM (SELECT label, unnest(embedding)::DOUBLE AS x,
-        |                   unnest(generate_series(1, len(embedding))) AS i FROM embeddings)
-        |      GROUP BY label, i)
-        |ORDER BY label, i""".stripMargin,
-
-    // The text form itself is engine-specific; the oracle checks the
-    // round-trip law (TRUE columns would flip on any parse/format bug)
-    // and the parsed-literal norm.
-    "vec_io" ->
-      """SELECT vec_id, len(embedding)::BIGINT AS dims,
-        |  TRUE AS rt_ok, TRUE AS sp_ok, 5.0 AS lit_norm
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "vec_sparse_norm" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |  round(sqrt(list_sum(list_transform(e.embedding,
-        |    x -> CASE WHEN abs(x) > 0.1 THEN x::DOUBLE * x::DOUBLE ELSE 0.0 END))), 6) AS snorm,
-        |  round(list_sum(list_transform(generate_series(1, len(e.embedding)), i ->
-        |    abs((CASE WHEN abs(e.embedding[i]) > 0.1 THEN e.embedding[i] ELSE 0 END)::DOUBLE -
-        |        (CASE WHEN abs(q.qv[i]) > 0.1 THEN q.qv[i] ELSE 0 END)::DOUBLE))), 6) AS sl1
-        |FROM embeddings e, q ORDER BY vec_id""".stripMargin,
-
-    "vec_sparse_normalize" ->
-      """WITH s AS (SELECT vec_id,
-        |    list_filter(list_transform(range(1, len(embedding) + 1),
-        |      i -> {'i': i, 'v': embedding[i]}), t -> abs(t.v) > 0.1) AS se
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, se,
-        |    sqrt(list_sum(list_transform(se, t -> t.v::DOUBLE * t.v::DOUBLE))) AS nrm
-        |  FROM s WHERE len(se) > 0),
-        |u AS (SELECT vec_id, unnest(se) AS t, nrm FROM n)
-        |SELECT vec_id, t.i::INT AS dim_i, round(t.v::DOUBLE / nrm, 6) + 0 AS nval
-        |FROM u ORDER BY vec_id, dim_i""".stripMargin,
-
-    "vec_convert" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+    },
+      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
         |h AS (SELECT vec_id, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
         |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
         |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
@@ -522,13 +461,26 @@ object VectorSuite {
         |  CASE WHEN e.embedding = q.qv THEN 0 WHEN e.embedding < q.qv THEN -1 ELSE 1 END AS scmp,
         |  CASE WHEN h.hv = hq.hqv THEN 0 WHEN h.hv < hq.hqv THEN -1 ELSE 1 END AS hcmp
         |FROM embeddings e, q, h, hq WHERE e.vec_id = h.vec_id
-        |ORDER BY e.vec_id""".stripMargin,
+        |ORDER BY e.vec_id""".stripMargin)),
 
-    // fp16 emulation as in vec_half_l2, plus ::FLOAT::DOUBLE for the
-    // fp32 finish step of the aggregate. The fp64 elementwise sums are
-    // exact (fp16-grid addends), so no rounding-order divergence.
-    "vec_half_agg" ->
-      """WITH h AS (SELECT label, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
+    // avg/sum(halfvec): inputs quantized to the fp16 grid, elementwise
+    // fp64 accumulation (EXACT for fp16-grid addends: every partial sum
+    // fits in 53 bits), fp32 finish, fp16 re-quantize — mirrored in the
+    // oracle via the bit-exact binary16 emulation + ::FLOAT casts.
+    Gated("vec_half_agg", (s, dir) =>
+      Tables(s, dir, "embeddings")
+        .groupBy(col("label"))
+        .agg(VF.halfvecAvg(col("embedding")).as("ah"),
+          VF.halfvecSum(col("embedding")).as("sh"))
+        .select(col("label"), posexplode(arrays_zip(col("ah"), col("sh"))).as(Seq("p", "z")))
+        .select(col("label"), (col("p") + 1).cast("int").as("i"),
+          round(col("z.ah").cast("double"), 6).as("avg_h"),
+          round(col("z.sh").cast("double"), 6).as("sum_h"))
+        .transform(Gate.ordered(_, "label", "i")),
+      // fp16 emulation as in vec_half_l2, plus ::FLOAT::DOUBLE for the
+      // fp32 finish step of the aggregate. The fp64 elementwise sums are
+      // exact (fp16-grid addends), so no rounding-order divergence.
+      Some("""WITH h AS (SELECT label, list_transform(embedding, x -> CASE WHEN x = 0 THEN 0.0
         |    ELSE round_even(x::DOUBLE / pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10), 0)
         |         * pow(2.0, greatest(floor(log2(abs(x::DOUBLE))), -14) - 10) END) AS hv
         |  FROM embeddings),
@@ -544,6 +496,6 @@ object VectorSuite {
         |  round(CASE WHEN s32 = 0 THEN 0.0
         |    ELSE round_even(s32 / pow(2.0, greatest(floor(log2(abs(s32))), -14) - 10), 0)
         |         * pow(2.0, greatest(floor(log2(abs(s32))), -14) - 10) END, 6) + 0 AS sum_h
-        |FROM f ORDER BY label, i""".stripMargin
+        |FROM f ORDER BY label, i""".stripMargin))
   )
 }

@@ -114,6 +114,28 @@ object StreamDedup {
     java.math.BigDecimal.valueOf(v)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** Two-pointer intersection count over SORTED long arrays — the
+    * per-pair verify with zero boxing/allocation (the Set-based count
+    * boxed every probe; measured as the bucket verify's dominant CPU). */
+  private def interSorted(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
+  }
+
+  /** `r` with its hs sorted: `r` itself when they already are (one
+    * linear check), else a copy with a sorted hs. */
+  private def withSortedHs(r: RetainedDoc): RetainedDoc = {
+    var i = 1
+    while (i < r.hs.length && r.hs(i - 1) <= r.hs(i)) i += 1
+    if (i >= r.hs.length) r
+    else { val hs = r.hs.clone(); java.util.Arrays.sort(hs); r.copy(hs = hs) }
+  }
+
   /**
    * Per-bucket exact verify: every arrival is Jaccard-checked against
    * the bucket's retained cohort (arrivals processed in (seq, doc_id)
@@ -131,29 +153,18 @@ object StreamDedup {
    * the stream. 0 = unbounded (the exact-oracle default; the gate
    * corpus has no flood buckets).
    */
-  /** Two-pointer intersection count over SORTED long arrays — the
-    * per-pair verify with zero boxing/allocation (the Set-based count
-    * boxed every probe; measured as the bucket verify's dominant CPU). */
-  private def interSorted(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) < b(j)) i += 1
-      else if (a(i) > b(j)) j += 1
-      else { n += 1; i += 1; j += 1 }
-    }
-    n
-  }
-
-  private def verifyPerBucket(tau: Double, maxCohort: Int)(key: Long,
+  private[graft] def verifyPerBucket(tau: Double, maxCohort: Int)(key: Long,
       it: Iterator[BandDoc],
       state: GroupState[Seq[RetainedDoc]]): Iterator[VerifiedPair] = {
     val arrivals = it.toArray.sortBy(h => (h.seq, h.doc_id))
     // invariant: retained docs hold their hs SORTED (stored below), so
     // every pair verify is a linear primitive merge; intersection
     // counts — and therefore emissions — are unchanged (hs sets are
-    // distinct hashes; order never enters the Jaccard).
+    // distinct hashes; order never enters the Jaccard). Checkpoints
+    // written before the stored hs were sorted hold them in arrival
+    // order, so the restore sorts any doc that is not sorted yet.
     val retained = scala.collection.mutable.ArrayBuffer.empty[RetainedDoc]
-    retained ++= state.getOption.getOrElse(Seq.empty)
+    retained ++= state.getOption.getOrElse(Seq.empty).map(withSortedHs)
     val out = scala.collection.mutable.ArrayBuffer.empty[VerifiedPair]
     arrivals.foreach { h =>
       val hsSorted = h.hs.clone()

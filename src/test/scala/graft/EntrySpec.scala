@@ -8,11 +8,21 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
-    assert(SparkEntry.queries.size >= 95)
-    // a name two suites define is an error, not a silent last-one-wins
+    // a name defined twice is an error, not a silent last-one-wins
+    def g(n: String) = SparkEntry.Gated(n, (_, _) => null, None)
     val e = intercept[IllegalArgumentException](
-      SparkEntry.union(Seq(Map("a" -> 1, "b" -> 2), Map("c" -> 3), Map("b" -> 4))))
-    assert(e.getMessage.contains("two suites: b"), e.getMessage)
+      SparkEntry.union(Seq(Seq(g("a"), g("b")), Seq(g("c")), Seq(g("b")))))
+    assert(e.getMessage.contains("defined twice: b"), e.getMessage)
+  }
+
+  test("gated set: 348 builders, 341 oracles, 7 rows-only queries") {
+    // a record that loses its oracle must fail here, not silently turn
+    // rows-only (the 348 include the 4 partsupp-only TPC-H keys)
+    assert(SparkEntry.queries.size == 348)
+    assert(SparkEntry.oracleSql.size == 341)
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      Set("index_advisor", "crypto_cipher", "crypto_crypt", "crypto_hmac",
+        "crypto_pgp", "crypto_pgp_pub", "fuzzy_phonetic"))
   }
 
   test("GraftExtensions wires the topk rewrite rule and strategy") {

@@ -65,6 +65,62 @@ class KernelPropertySpec extends AnyFunSuite {
     })
   }
 
+  // ---- distance kernel: VectorDistance's two paths vs float[] forms ----
+
+  test("VectorDistance: eval, generated code and float[] kernel agree bit for bit") {
+    import graft.functions.{VectorDistance, VectorKernel, VectorMetrics => M}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val elem = Gen.frequency(8 -> Gen.chooseNum(-1e3f, 1e3f),
+      1 -> Gen.oneOf(0f, -0f, Float.NaN, Float.PositiveInfinity,
+        Float.NegativeInfinity, Float.MinPositiveValue))
+    def vec(n: Int) = Gen.listOfN(n, elem).map(_.toArray)
+    val sameDims = Gen.chooseNum(0, 48).flatMap(n => Gen.zip(vec(n), vec(n)))
+    val otherDims = for {
+      n <- Gen.chooseNum(0, 8); m <- Gen.chooseNum(0, 8).suchThat(_ != n)
+      a <- vec(n); b <- vec(m)
+    } yield (a, b)
+    val viaFloats: Map[String, (Array[Float], Array[Float]) => Double] = Map(
+      M.L2 -> ((a, b) => math.sqrt(VectorKernel.l2sq(a, b))),
+      M.L2Sq -> ((a, b) => VectorKernel.l2sq(a, b)),
+      M.Ip -> ((a, b) => VectorKernel.dot(a, b)),
+      M.NegIp -> ((a, b) => -VectorKernel.dot(a, b)),
+      M.Cosine -> ((a, b) => VectorKernel.cosineDistance(a, b)),
+      M.L1 -> ((a, b) => VectorKernel.l1(a, b)),
+      M.Spherical -> ((a, b) =>
+        math.acos(math.max(-1.0, math.min(1.0, VectorKernel.dot(a, b)))) / math.Pi))
+    assert(viaFloats.keySet == M.all.toSet)
+    val t = ArrayType(FloatType, containsNull = false)
+    // doubleToLongBits: bit equality with every NaN folded to one
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    for (m <- M.all) {
+      val e = VectorDistance(BoundReference(0, t, nullable = false),
+        BoundReference(1, t, nullable = false), m)
+      val proj = GenerateUnsafeProjection.generate(Seq(e))
+      // interpreted over GenericArrayData, generated over UnsafeArrayData
+      def eval(a: Array[Float], b: Array[Float]) =
+        e.eval(InternalRow(new GenericArrayData(a), new GenericArrayData(b)))
+          .asInstanceOf[Double]
+      def gen(a: Array[Float], b: Array[Float]) =
+        proj(InternalRow(UnsafeArrayData.fromPrimitiveArray(a),
+          UnsafeArrayData.fromPrimitiveArray(b))).getDouble(0)
+      check(s"distance-$m", Prop.forAll(sameDims) { case (a, b) =>
+        val want = bits(viaFloats(m)(a, b))
+        bits(eval(a, b)) == want && bits(gen(a, b)) == want
+      })
+      check(s"distance-$m-dims", Prop.forAll(otherDims) { case (a, b) =>
+        val msg = s"graft: vector dims differ: ${a.length} vs ${b.length}"
+        Seq(() => eval(a, b), () => gen(a, b)).forall { f =>
+          try { f(); false }
+          catch { case x: IllegalArgumentException => x.getMessage == msg }
+        }
+      })
+    }
+  }
+
   // ---- PQ kernel (pure JVM: encode/table math, no Spark) ----
 
   test("pq encode picks the argmin centroid; adc of own centroid is exact") {

@@ -83,11 +83,10 @@ class MaskingSpec extends SparkSpec {
   }
 
   test("plan contract: a masking/redaction/unaccent pass is map-only") {
-    import graft.queries.RelationalSuite5
     for (name <- Seq("masking_fns", "pii_redact", "unaccent_fns", "crypto_hmac")) {
       // strip the gate's ordering device (repartition(1)+sort) — the
       // operator pass underneath must be one codegen'd scan, no shuffle
-      val df = RelationalSuite5.queries(name)(spark, "/root/testdata/sf0.001")
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       val plan = df.queryExecution.executedPlan.toString
       val exchanges = "Exchange".r.findAllIn(plan).size
       assert(exchanges == 1, // exactly the gate's own repartition(1)

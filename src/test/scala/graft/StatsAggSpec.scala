@@ -19,8 +19,7 @@ class StatsAggSpec extends SparkSpec {
       corr(col("l_quantity"), col("l_extendedprice")).as("r"))
       .collect().map(r => r.getString(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val exact = graft.queries.RelationalSuite3
-      .queries("stats_agg")(spark, sfDir)
+    val exact = SparkEntry.queries("stats_agg")(spark, sfDir)
       .collect().map(r => r.getString(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     assert(exact.keySet == builtin.keySet && exact.nonEmpty)

@@ -64,6 +64,33 @@ class StreamingSpec extends SparkSpec {
       s"stream/batch diff=${((got diff expected) ++ (expected diff got)).take(5)}")
   }
 
+  test("verified pairs: a restored cohort with unsorted hs emits the sorted cohort's pairs") {
+    import graft.streaming.StreamDedup.{BandDoc, RetainedDoc, verifyPerBucket}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, TestGroupState}
+    val sorted = Seq(
+      RetainedDoc(1, 10, Array(1L, 2L, 3L, 4L, 5L, 6L)),
+      RetainedDoc(2, 11, Array(-9L, 2L, 4L, 6L, 8L)),
+      RetainedDoc(3, 12, Array(7L)))
+    // an older checkpoint's layout: hs in arrival order
+    val unsorted = sorted.map(r => r.copy(hs = r.hs.reverse))
+    val arrivals = Seq(
+      BandDoc(7L, 4, 13, Array(6L, 5L, 4L, 3L, 2L, 1L, 9L)),
+      BandDoc(7L, 5, 14, Array(8L, -9L, 6L, 4L)))
+    def run(cohort: Seq[RetainedDoc]) = {
+      val st: GroupState[Seq[RetainedDoc]] = TestGroupState.create(
+        org.apache.spark.api.java.Optional.of(cohort), GroupStateTimeout.NoTimeout(), 0L,
+        org.apache.spark.api.java.Optional.empty[Long](), false)
+      val pairs = verifyPerBucket(0.5, 0)(7L, arrivals.iterator, st).toList
+      (pairs, st.get)
+    }
+    val (want, _) = run(sorted)
+    val (got, restored) = run(unsorted)
+    assert(want.map(p => (p.id_a, p.id_b)).toSet ==
+      Set((10L, 13L), (11L, 14L)), want)
+    assert(got == want)
+    assert(restored.forall(r => r.hs.sameElements(r.hs.sorted)))
+  }
+
   test("foreachBatch-maintained incremental matview equals batch under slicing") {
     import graft.operators.Matview
     val cents = "CAST(round(value * 100, 0) AS BIGINT)"

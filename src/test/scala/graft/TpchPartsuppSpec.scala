@@ -54,8 +54,8 @@ class TpchPartsuppSpec extends SparkSpec {
 
   for (name <- RelationalSuite3.partsuppKeys.toSeq.sorted) {
     test(s"$name matches its oracle SQL and is non-empty") {
-      val got = rows(RelationalSuite3.queries(name)(spark, dir))
-      val exp = rows(spark.sql(RelationalSuite3.oracle(name)))
+      val got = rows(SparkEntry.queries(name)(spark, dir))
+      val exp = rows(spark.sql(SparkEntry.oracleSql(name)))
       assert(got.nonEmpty, s"$name returned no rows — widen its predicates")
       assert(got.toSet == exp.toSet,
         s"$name: spark=${got.take(5)} oracle=${exp.take(5)}")
