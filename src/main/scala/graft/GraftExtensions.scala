@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{SqlFunctions, SqlTableFunctions}
-import graft.plans.{KnnJoin, RewriteWindowTopK, TopKPerKey}
+import graft.plans.{KnnJoin, ParamLiterals, RewriteWindowTopK, TopKPerKey}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -13,9 +13,10 @@ import org.apache.spark.sql.graft.Bridge
  *
  *   spark.sql.extensions=graft.GraftExtensions
  *
- * injects the PG parser, the optimizer rule + planning strategies AND
- * the whole SQL function surface (vector/mask/sketch + tsearch/ltree/
- * crypt/fuzzystrmatch + jsonb/hstore/intarray/earthdistance) at
+ * injects the PG parser, the optimizer rules + planning strategies, the
+ * [[graft.plans.ParamLiterals]] codegen rule AND the whole SQL function
+ * surface (vector/mask/sketch + tsearch/ltree/crypt/fuzzystrmatch +
+ * jsonb/hstore/intarray/earthdistance) at
  * session build time, so `spark.sql("SELECT to_tsvector(t) ...")`
  * works with no per-session call — exactly how an openGauss user gets
  * the contrib names after CREATE EXTENSION. Sessions built without the
@@ -27,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((_, delegate) => new graft.plans.PgSqlParser(delegate))
     rules.foreach(r => ext.injectOptimizerRule(_ => r))
     strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    ext.injectColumnar(_ => ParamLiterals)
     SqlFunctions.allBuilders.foreach { case (name, b) =>
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", name), exprs => b(exprs)))
@@ -40,7 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
   /** What graft adds to Catalyst, besides its SQL functions. */
-  private val rules = Seq(RewriteWindowTopK)
+  private val rules = Seq(RewriteWindowTopK, KnnJoin.pushQidFilter)
   private val strategies = Seq(TopKPerKey.strategy, KnnJoin.strategy)
 
   /** Sessions `install` has run on (weak keys: a dropped session is
@@ -49,12 +51,14 @@ object GraftExtensions {
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
 
   /**
-   * Install graft's optimizer rule, planning strategies, SQL functions
+   * Install graft's optimizer rules, planning strategies, SQL functions
    * and table functions on an existing session (notebooks, sessions
    * built without the extension). Idempotent: after the first call on a
    * session, a call is one map lookup. It cannot add the PG operator
-   * parser — Spark fixes a session's parser when the session is built,
-   * so `<->`-style operator syntax needs the extension.
+   * parser or the [[graft.plans.ParamLiterals]] codegen rule: Spark
+   * fixes a session's parser and its columnar rules when the session is
+   * built, so `<->`-style operator syntax, and filters that share one
+   * compiled class across their constants, need the extension.
    */
   def install(spark: SparkSession): Unit = installed.synchronized {
     if (installed.put(spark, java.lang.Boolean.TRUE) == null) {

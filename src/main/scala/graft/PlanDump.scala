@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -13,8 +14,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
  * `.explain("formatted")` to <outDir>/<name>.txt and print a
  * one-line breakdown — construction seconds (plan-time jobs included),
  * timed noop-sink execution seconds, and the JOB / STAGE / TASK counts
- * observed in each phase. Multi-job queries (driver-side loops, eager
- * statement routing) show up immediately as high job counts. The dump
+ * observed in each phase, plus the codegen compiles and their ms
+ * (Spark's `CodegenMetrics` deltas) of the timed run. Multi-job queries
+ * (driver-side loops, eager statement routing) show up immediately as
+ * high job counts. The dump
  * ends with every physical node's SQLMetrics from the timed run (e.g.
  * KnnJoin's pairs / pairs_pruned / pairs_rounded).
  *
@@ -77,9 +80,11 @@ object PlanDump {
       val planText = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       lastRun.set(null)
+      val (cg0, cgMs0) = codegenCompiles()
       val te0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val te1 = System.nanoTime()
+      val (cg1, cgMs1) = codegenCompiles()
       Thread.sleep(300)
       val (j2, s2, t2c, m2) = snap()
       val metricText = Option(lastRun.get()).toSeq.flatMap(qe => nodes(qe.executedPlan))
@@ -91,8 +96,18 @@ object PlanDump {
       println(f"PLANDUMP $name construct=${(tc1 - tc0) / 1e9}%.3fs " +
         f"(jobs=${j1 - j0} stages=${s1 - s0} tasks=${t1c - t0c} taskMs=${m1 - m0}) " +
         f"exec=${(te1 - te0) / 1e9}%.3fs " +
-        f"(jobs=${j2 - j1} stages=${s2 - s1} tasks=${t2c - t1c} taskMs=${m2 - m1})")
+        f"(jobs=${j2 - j1} stages=${s2 - s1} tasks=${t2c - t1c} taskMs=${m2 - m1} " +
+        f"compiles=${cg1 - cg0} compileMs=${cgMs1 - cgMs0}%.1f)")
     }
     spark.stop()
+  }
+
+  /** (codegen compiles so far in this JVM, their summed ms while
+    * Spark's histogram still holds every sample, else count × mean). */
+  private def codegenCompiles(): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val n = h.getCount
+    val snap = h.getSnapshot
+    (n, if (n <= snap.size()) snap.getValues.sum.toDouble else snap.getMean * n)
   }
 }

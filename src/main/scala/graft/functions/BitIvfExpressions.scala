@@ -30,19 +30,14 @@ case class BitNearestCentroid(child: Expression, centroids: Seq[Array[Byte]])
 
   def nearest(code: Array[Byte]): Int = {
     var best = 0
-    var bestD = Int.MaxValue
+    var bestD = Long.MaxValue
     var c = 0
     while (c < cents.length) {
       val cc = cents(c)
       if (cc.length != code.length)
         throw new IllegalArgumentException(
           s"graft: bit code width ${code.length} != centroid width ${cc.length}")
-      var d = 0
-      var i = 0
-      while (i < cc.length) {
-        d += java.lang.Integer.bitCount((cc(i) ^ code(i)) & 0xff)
-        i += 1
-      }
+      val d = VectorKernel.hammingBits(cc, code)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }

@@ -78,26 +78,9 @@ case class VectorL2Norm(child: Expression)
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_norm"
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val n = x.numElements()
-    var acc = 0.0; var i = 0
-    while (i < n) { val v = x.getFloat(i).toDouble; acc += v * v; i += 1 }
-    math.sqrt(acc)
-  }
+  override def nullSafeEval(a: Any): Any = VectorKernel.l2Norm(a.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = (double) $a.getFloat($i);
-         |  $acc += $v * $v;
-         |}
-         |${ev.value} = Math.sqrt($acc);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.VectorKernel.l2Norm($a)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -111,37 +94,11 @@ case class VectorL2Normalize(child: Expression)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_l2_normalize"
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val n = x.numElements()
-    var acc = 0.0; var i = 0
-    while (i < n) { val v = x.getFloat(i).toDouble; acc += v * v; i += 1 }
-    val norm = math.sqrt(acc)
-    val out = new Array[Double](n)
-    if (norm > 0) { i = 0; while (i < n) { out(i) = x.getFloat(i).toDouble / norm; i += 1 } }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    new GenericArrayData(VectorKernel.l2Normalize(a.asInstanceOf[ArrayData]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val v = ctx.freshName("v")
-      val out = ctx.freshName("out"); val norm = ctx.freshName("norm")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = (double) $a.getFloat($i);
-         |  $acc += $v * $v;
-         |}
-         |double $norm = Math.sqrt($acc);
-         |double[] $out = new double[$n];
-         |if ($norm > 0) {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $out[$i] = (double) $a.getFloat($i) / $norm;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
+      s".fromPrimitiveArray(graft.functions.VectorKernel.l2Normalize($a))")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -228,57 +185,11 @@ case class BitDistance(left: Expression, right: Expression, metric: String)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = s"bit_${metric}_distance"
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]; val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length)
-      throw new IllegalArgumentException(
-        s"graft: bit vector lengths differ: ${x.length} vs ${y.length}")
-    if (metric == "hamming") {
-      var acc = 0L; var i = 0
-      while (i < x.length) { acc += java.lang.Integer.bitCount((x(i) ^ y(i)) & 0xff); i += 1 }
-      acc.toDouble
-    } else {
-      var ab = 0L; var aob = 0L; var i = 0
-      while (i < x.length) {
-        ab += java.lang.Integer.bitCount(x(i) & y(i) & 0xff)
-        aob += java.lang.Integer.bitCount((x(i) | y(i)) & 0xff)
-        i += 1
-      }
-      if (aob == 0) Double.NaN else 1.0 - ab.toDouble / aob.toDouble
-    }
+    val (x, y) = (a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+    if (metric == "hamming") VectorKernel.hamming(x, y) else VectorKernel.jaccard(x, y)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val check =
-        s"""
-           |if ($a.length != $b.length) {
-           |  throw new IllegalArgumentException("graft: bit vector lengths differ: " +
-           |    $a.length + " vs " + $b.length);
-           |}
-         """.stripMargin
-      if (metric == "hamming") {
-        val acc = ctx.freshName("acc")
-        s"""
-           |$check
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $a.length; $i++) {
-           |  $acc += java.lang.Integer.bitCount(($a[$i] ^ $b[$i]) & 0xff);
-           |}
-           |${ev.value} = (double) $acc;
-         """.stripMargin
-      } else {
-        val ab = ctx.freshName("ab"); val aob = ctx.freshName("aob")
-        s"""
-           |$check
-           |long $ab = 0L; long $aob = 0L;
-           |for (int $i = 0; $i < $a.length; $i++) {
-           |  $ab += java.lang.Integer.bitCount($a[$i] & $b[$i] & 0xff);
-           |  $aob += java.lang.Integer.bitCount(($a[$i] | $b[$i]) & 0xff);
-           |}
-           |${ev.value} = ($aob == 0L) ? Double.NaN : 1.0 - (double) $ab / (double) $aob;
-         """.stripMargin
-      }
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernel.$metric($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
  * The scalar distance kernel over fp32 vectors: `float[]` forms for
  * task-side loops (the fused KNN join, IVF probe ranking, HNSW beams,
  * k-means and PQ encoding), and `ArrayData` forms that
- * [[VectorDistance]] calls from both its interpreted and its generated
- * code.
+ * [[VectorDistance]], [[VectorL2Norm]] and [[VectorL2Normalize]] call
+ * from both their interpreted and their generated code. The bit-vector
+ * forms serve [[BitDistance]] the same way, and the bit IVF's centroid
+ * ranking.
  *
  * Every element pair is widened to double and accumulated in index
  * order: `acc += ((double) a[i] - (double) b[i])²`. Both forms sum in
@@ -141,4 +143,57 @@ object VectorKernel {
   /** acos(clamp(a·b, −1, 1)) / π. */
   def spherical(a: ArrayData, b: ArrayData): Double =
     math.acos(math.max(-1.0, math.min(1.0, dot(a, b)))) / math.Pi
+
+  // ---- one vector: the norm and the normalized vector ----
+
+  /** √Σ (double) a[i]². */
+  def l2Norm(a: ArrayData): Double = {
+    val n = a.numElements()
+    var acc = 0.0; var i = 0
+    while (i < n) { val v = a.getFloat(i).toDouble; acc += v * v; i += 1 }
+    math.sqrt(acc)
+  }
+
+  /** (double) a[i] / [[l2Norm]]; the zero vector when the norm is 0. */
+  def l2Normalize(a: ArrayData): Array[Double] = {
+    val n = a.numElements()
+    val norm = l2Norm(a)
+    val out = new Array[Double](n)
+    if (norm > 0) { var i = 0; while (i < n) { out(i) = a.getFloat(i).toDouble / norm; i += 1 } }
+    out
+  }
+
+  // ---- bit vectors (one bit per dimension, packed into bytes) ----
+
+  /** Σ popcount(a[i] ^ b[i]) over a's bytes; callers keep
+    * `a.length == b.length`. */
+  def hammingBits(a: Array[Byte], b: Array[Byte]): Long = {
+    var acc = 0L; var i = 0
+    while (i < a.length) { acc += Integer.bitCount((a(i) ^ b(i)) & 0xff); i += 1 }
+    acc
+  }
+
+  /** Throws unless `a` and `b` have one byte length. */
+  private def bitDims(a: Array[Byte], b: Array[Byte]): Unit =
+    if (a.length != b.length)
+      throw new IllegalArgumentException(
+        s"graft: bit vector lengths differ: ${a.length} vs ${b.length}")
+
+  /** The number of differing bits. */
+  def hamming(a: Array[Byte], b: Array[Byte]): Double = {
+    bitDims(a, b)
+    hammingBits(a, b).toDouble
+  }
+
+  /** 1 − |a ∧ b| / |a ∨ b|; NaN when both are all zero bits. */
+  def jaccard(a: Array[Byte], b: Array[Byte]): Double = {
+    bitDims(a, b)
+    var ab = 0L; var aob = 0L; var i = 0
+    while (i < a.length) {
+      ab += Integer.bitCount(a(i) & b(i) & 0xff)
+      aob += Integer.bitCount((a(i) | b(i)) & 0xff)
+      i += 1
+    }
+    if (aob == 0) Double.NaN else 1.0 - ab.toDouble / aob.toDouble
+  }
 }

@@ -401,15 +401,26 @@ private[graft] object LocalKMeans {
   def fit(pts: Array[Array[Float]], k0: Int, seed: Long, maxIter: Int,
       restarts: Int = 4): Array[Array[Float]] = {
     // restarts are embarrassingly parallel (fitOnce is pure in its
-    // seed) — run them on driver threads; selection stays the
+    // seed) — run them on the restart pool; selection stays the
     // sequential rule (strictly smaller cost wins, earliest restart
     // on a tie), so the result is unchanged
-    val results = (0 until restarts).toArray.map { r =>
-      scala.concurrent.Future(fitOnce(pts, k0, seed + r, maxIter))(
-        scala.concurrent.ExecutionContext.global)
-    }.map(f => scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf))
+    val results = (0 until restarts).toArray
+      .map(r => scala.concurrent.Future(fitOnce(pts, k0, seed + r, maxIter))(restartPool))
+      .map(f => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
     results.zipWithIndex.minBy { case ((_, cost), r) => (cost, r) }._1._1
+  }
+
+  /** Restarts of every concurrent fit share these daemon threads, one
+    * per core; fits queue rather than oversubscribe the driver, and an
+    * idle thread exits after a minute. A restart never waits on
+    * another, so the bound cannot deadlock. */
+  private lazy val restartPool = {
+    val n = Runtime.getRuntime.availableProcessors()
+    val ex = new java.util.concurrent.ThreadPoolExecutor(n, n, 60L,
+      java.util.concurrent.TimeUnit.SECONDS, new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => { val t = new Thread(r, "graft-kmeans"); t.setDaemon(true); t })
+    ex.allowCoreThreadTimeOut(true)
+    scala.concurrent.ExecutionContext.fromExecutorService(ex)
   }
 
   private def fitOnce(pts: Array[Array[Float]], k0: Int, seed: Long,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
-import graft.functions.{BitNearestCentroid, UnpackBits}
+import graft.functions.{BitNearestCentroid, UnpackBits, VectorKernel}
 
 /**
  * Hamming-metric IVF over packed bit codes — the binary-embedding
@@ -35,18 +35,10 @@ object IvfBit {
     def nlists: Int = centroids.length
     def nbits: Int = centroids.headOption.map(_.length * 8).getOrElse(0)
 
-    def hamming(a: Array[Byte], b: Array[Byte]): Int = {
-      var acc = 0; var i = 0
-      while (i < a.length) {
-        acc += java.lang.Integer.bitCount((a(i) ^ b(i)) & 0xff); i += 1
-      }
-      acc
-    }
-
     /** Nearest-centroid list ids for one query code, best first
       * (ties to the lower list id — total order, deterministic). */
     def probes(q: Array[Byte], nprobe: Int): Seq[Int] =
-      centroids.indices.sortBy(i => (hamming(q, centroids(i)), i)).take(nprobe)
+      centroids.indices.sortBy(i => (VectorKernel.hammingBits(q, centroids(i)), i)).take(nprobe)
   }
 
   /** Sign-quantize a float vector driver-side (BinaryQuantize's

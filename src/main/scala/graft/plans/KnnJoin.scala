@@ -5,9 +5,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BoundReference, SpecificInternalRow, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, BoundReference, PredicateHelper, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graft.Bridge
@@ -260,6 +261,32 @@ object KnnJoin {
 
   /** The planning strategy, for SparkSessionExtensions injection. */
   def strategy: SparkStrategy = KnnJoinStrategy
+
+  /**
+   * Moves each deterministic filter conjunct that reads only the join's
+   * qid into the query child. A qid group's heap depends on its own
+   * query rows alone, so dropping whole groups before the scan returns
+   * the rows that dropping them after would, and the corpus is scored
+   * only against the queries kept. Floating-point qids stay put: their
+   * groups are keyed on the normalized value (-0.0 with 0.0), and a
+   * predicate on the raw value could split a group.
+   */
+  private object PushQidFilter extends Rule[LogicalPlan] with PredicateHelper {
+    override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+      case f @ Filter(cond, j: KnnJoinPlan) if !Bridge.needsNormalize(j.reads(2)) =>
+        val qid = AttributeSet(j.reads(2))
+        val (push, keep) = splitConjunctivePredicates(cond)
+          .partition(p => p.deterministic && p.references.subsetOf(qid))
+        if (push.isEmpty) f
+        else {
+          val pushed = j.copy(queries = Filter(push.reduce(And), j.queries))
+          keep.reduceOption(And).fold[LogicalPlan](pushed)(Filter(_, pushed))
+        }
+    }
+  }
+
+  /** The qid filter pushdown, for optimizer injection. */
+  def pushQidFilter: Rule[LogicalPlan] = PushQidFilter
 
   /**
    * The k nearest rows of `corpus` (nid: long, v: array<float>) for each

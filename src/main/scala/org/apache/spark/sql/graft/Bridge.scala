@@ -28,6 +28,13 @@ object Bridge {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** Whether [[normalizeFloats]] changes `e`: its type holds a float or
+    * double. */
+  def needsNormalize(e: Expression): Boolean = e.dataType.existsRecursively {
+    case org.apache.spark.sql.types.FloatType | org.apache.spark.sql.types.DoubleType => true
+    case _ => false
+  }
+
   /** Analyzed logical plan of a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
@@ -76,6 +83,13 @@ object Bridge {
            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]],
          Seq[org.apache.spark.sql.execution.SparkStrategy]) =
     (ext.buildOptimizerRules(spark), ext.buildPlannerStrategies(spark))
+
+  /** The columnar rules a SparkSessionExtensions instance would inject
+    * (for specs). */
+  def injectedColumnarRules(ext: org.apache.spark.sql.SparkSessionExtensions,
+      spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.ColumnarRule] =
+    ext.buildColumnarRules(spark)
 
   /** Register a named SQL function backed by a Catalyst expression builder. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

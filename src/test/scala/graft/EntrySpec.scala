@@ -34,8 +34,11 @@ class EntrySpec extends SparkSpec {
     val (rules, strategies) =
       org.apache.spark.sql.graft.Bridge.injectedRulesAndStrategies(ext, spark)
     assert(rules.contains(graft.plans.RewriteWindowTopK))
+    assert(rules.contains(graft.plans.KnnJoin.pushQidFilter))
     assert(strategies.contains(graft.plans.TopKPerKey.strategy))
     assert(strategies.contains(graft.plans.KnnJoin.strategy))
+    assert(org.apache.spark.sql.graft.Bridge.injectedColumnarRules(ext, spark) ==
+      Seq(graft.plans.ParamLiterals))
     // the whole SQL-name surface injects at session build (r16)
     val names =
       org.apache.spark.sql.graft.Bridge.injectedFunctionNames(ext).toSet
@@ -57,6 +60,7 @@ class EntrySpec extends SparkSpec {
     // the experimental lists hold only what install added
     val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     assert(exp.extraOptimizations.count(_ eq graft.plans.RewriteWindowTopK) == 1)
+    assert(exp.extraOptimizations.count(_ eq graft.plans.KnnJoin.pushQidFilter) == 1)
     assert(exp.extraStrategies.count(_ eq graft.plans.TopKPerKey.strategy) == 1)
     assert(exp.extraStrategies.count(_ eq graft.plans.KnnJoin.strategy) == 1)
     val fnCounts = s.catalog.listFunctions().collect().toSeq

@@ -121,6 +121,74 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("norm, normalize and bit distances: eval, generated code and kernel agree bit for bit") {
+    import graft.functions.{BitDistance, VectorKernel, VectorL2Norm, VectorL2Normalize}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType}
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    val elem = Gen.frequency(8 -> Gen.chooseNum(-1e3f, 1e3f),
+      1 -> Gen.oneOf(0f, -0f, Float.NaN, Float.PositiveInfinity,
+        Float.NegativeInfinity, Float.MinPositiveValue))
+    val vecs = Gen.chooseNum(0, 48).flatMap(n => Gen.listOfN(n, elem).map(_.toArray))
+    val t = ArrayType(FloatType, containsNull = false)
+    // interpreted over GenericArrayData, generated over UnsafeArrayData
+    def paths(e: Expression, v: Array[Float]): (Any, Any) =
+      (e.eval(InternalRow(new GenericArrayData(v))),
+        GenerateUnsafeProjection.generate(Seq(e))(
+          InternalRow(UnsafeArrayData.fromPrimitiveArray(v))).copy().get(0, e.dataType))
+    val norm = VectorL2Norm(BoundReference(0, t, nullable = false))
+    val unit = VectorL2Normalize(BoundReference(0, t, nullable = false))
+    check("l2-norm", Prop.forAll(vecs) { v =>
+      // the reference: the float[] dot of v with itself, then sqrt
+      val want = bits(math.sqrt(VectorKernel.dot(v, v)))
+      val (e, g) = paths(norm, v)
+      bits(e.asInstanceOf[Double]) == want && bits(g.asInstanceOf[Double]) == want &&
+        bits(VectorKernel.l2Norm(new GenericArrayData(v))) == want
+    })
+    check("l2-normalize", Prop.forAll(vecs) { v =>
+      val n = math.sqrt(VectorKernel.dot(v, v))
+      val want = v.map(x => bits(if (n > 0) x.toDouble / n else 0.0)).toSeq
+      val (e, g) = paths(unit, v)
+      Seq(e, g).forall(a => a.asInstanceOf[ArrayData].toDoubleArray().map(bits).toSeq == want) &&
+        VectorKernel.l2Normalize(UnsafeArrayData.fromPrimitiveArray(v)).map(bits).toSeq == want
+    })
+    val codes = Gen.chooseNum(0, 16).flatMap(n =>
+      Gen.zip(Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray),
+        Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray)))
+    for (m <- Seq("hamming", "jaccard")) {
+      val e = BitDistance(BoundReference(0, BinaryType, nullable = false),
+        BoundReference(1, BinaryType, nullable = false), m)
+      val proj = GenerateUnsafeProjection.generate(Seq(e))
+      val kernel: (Array[Byte], Array[Byte]) => Double =
+        if (m == "hamming") VectorKernel.hamming else VectorKernel.jaccard
+      // the reference: java.util.BitSet cardinalities
+      def want(a: Array[Byte], b: Array[Byte]): Double = {
+        def set(x: Array[Byte]) = java.util.BitSet.valueOf(x)
+        val x = set(a); x.xor(set(b))
+        val and = set(a); and.and(set(b))
+        val or = set(a); or.or(set(b))
+        if (m == "hamming") x.cardinality.toDouble
+        else if (or.cardinality == 0) Double.NaN
+        else 1.0 - and.cardinality.toDouble / or.cardinality.toDouble
+      }
+      check(s"bit-$m", Prop.forAll(codes) { case (a, b) =>
+        val w = bits(want(a, b))
+        bits(e.eval(InternalRow(a, b)).asInstanceOf[Double]) == w &&
+          bits(proj(InternalRow(a, b)).getDouble(0)) == w && bits(kernel(a, b)) == w
+      })
+      val msg = "graft: bit vector lengths differ: 2 vs 3"
+      val (a, b) = (Array[Byte](1, 2), Array[Byte](1, 2, 3))
+      Seq(() => e.eval(InternalRow(a, b)), () => proj(InternalRow(a, b)), () => kernel(a, b))
+        .foreach { f =>
+          val x = intercept[IllegalArgumentException](f())
+          assert(x.getMessage == msg)
+        }
+    }
+  }
+
   // ---- PQ kernel (pure JVM: encode/table math, no Spark) ----
 
   test("pq encode picks the argmin centroid; adc of own centroid is exact") {

@@ -264,4 +264,36 @@ class KnnJoinSpec extends SparkSpec {
       model, 5, nprobe = 4)
     assert(rows(viaIvf) == rows(want))
   }
+
+  test("a filter on qid moves into the query side: filter-after rows, fewer pairs") {
+    val c = corpus((0 until 40).map(i => (java.lang.Long.valueOf(i.toLong), vec(6))), 4)
+    val q = queries(Seq((1L, vec(6)), (2L, vec(6)), (3L, vec(6)), (2L, vec(6))))
+    val join = Knn.knnJoin(q, "qv", "qid", c, "vec", "id", 3)
+    val all = rows(join)
+    def node(df: DataFrame) = df.queryExecution.executedPlan
+      .collect { case n: graft.plans.KnnJoinExec => n }.head
+    for ((f, keep) <- Seq[(Column, ((Any, Int, Long, Long)) => Boolean)](
+        (col("qid") === 2L, _._1 == 2L),
+        (col("qid").isin(1L, 3L), t => t._1 == 1L || t._1 == 3L),
+        (col("qid") === 2L && col("rank") <= 2, t => t._1 == 2L && t._2 <= 2))) {
+      val df = join.filter(f)
+      assert(rows(df) == all.filter(keep), f)
+      // two of the four query rows pass each filter (qid 2's two rows
+      // still share one heap)
+      assert(node(df).metrics("pairs").value == 40L * 2, f)
+      assert(node(df).queries.exists(_.isInstanceOf[org.apache.spark.sql.execution.FilterExec]))
+    }
+    // a conjunct on rank stays above the join; so does a filter on a
+    // floating-point qid, whose groups are keyed on the normalized value
+    val ranked = join.filter(col("rank") === 1)
+    assert(rows(ranked) == all.filter(_._2 == 1))
+    assert(node(ranked).metrics("pairs").value == 40L * 4)
+    val dq = frame(StructType(Seq(StructField("qid", DoubleType),
+        StructField("qv", ArrayType(FloatType)))),
+      Seq(0.0, -0.0, 1.0).map(x => Row(x, vec(6).toSeq)), 2)
+    val djoin = Knn.knnJoin(dq, "qv", "qid", c, "vec", "id", 3)
+    val zero = djoin.filter(col("qid") === 0.0)
+    assert(rows(zero) == rows(djoin).filter(_._1 == 0.0))
+    assert(node(zero).metrics("pairs").value == 40L * 3)
+  }
 }
