@@ -140,23 +140,11 @@ object Hnsw {
    * id-sorted order, making the table self-contained on reload.
    */
   def buildIndex(df: DataFrame, vecCol: String, idCol: String,
-      numParts: Int, params: Params = Params()): Dataset[GraphRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"),
+      numParts: Int, params: Params = Params()): Dataset[GraphRow] =
+    buildShards(df.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec"),
-        pmod(xxhash64(col(idCol)), lit(numParts)).cast("int").as("part_id"))
-      .as[(Long, Array[Float], Int)]
-      .groupByKey(_._3) // one graph per LOGICAL shard (search regroups
-      .flatMapGroups { (pid, it) => // the same way, so nbrs stay valid)
-        val rows = it.toArray.sortBy(_._1) // deterministic insertion order
-        val vecs = rows.map(_._2)
-        val adj = buildGraph(vecs, params)
-        rows.indices.iterator.map { i =>
-          GraphRow(pid, rows(i)._1, vecs(i), adj(i))
-        }
-      }
-  }
+        pmod(xxhash64(col(idCol)), lit(numParts)).cast("int").as("part_id")),
+      params)
 
   /**
    * Cluster-sharded build: shards follow an IVF coarse quantizer
@@ -167,21 +155,26 @@ object Hnsw {
    * distribution.
    */
   def buildIndexClustered(df: DataFrame, vecCol: String, idCol: String,
-      model: Ivf.Model, params: Params = Params()): Dataset[GraphRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Ivf.assign(df, vecCol, model)
+      model: Ivf.Model, params: Params = Params()): Dataset[GraphRow] =
+    buildShards(Ivf.assign(df, vecCol, model)
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec"),
-        col("list_id").cast("int").as("part_id"))
-      .as[(Long, Array[Float], Int)]
+        col("list_id").cast("int").as("part_id")), params)
+
+  /** One graph per LOGICAL shard of (id, vec, part_id) rows, inserted
+    * in id order — the order [[beamShard]] re-derives, so nbrs stay
+    * valid however the index is later laid out. */
+  private def buildShards(rows: DataFrame, params: Params): Dataset[GraphRow] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.as[(Long, Array[Float], Int)]
       .groupByKey(_._3)
       .flatMapGroups { (pid, it) =>
-        val rows = it.toArray.sortBy(_._1)
-        val vecs = rows.map(_._2)
+        val shard = it.toArray.sortBy(_._1) // deterministic insertion order
+        val vecs = shard.map(_._2)
         val adj = buildGraph(vecs, params)
-        rows.indices.iterator.map { i =>
-          GraphRow(pid, rows(i)._1, vecs(i), adj(i))
+        shard.indices.iterator.map { i =>
+          GraphRow(pid, shard(i)._1, vecs(i), adj(i))
         }
       }
   }
@@ -220,168 +213,41 @@ object Hnsw {
   }
 
   /**
-   * Many-query ANN through the shard graphs: every shard runs one beam
-   * PER QUERY (queries ride along as a broadcast-sized array, the same
-   * contract as Knn.knnJoin's broadcast side), then a bounded-heap
-   * partial aggregate per query id reranks the union of beams — the
-   * shuffle carries at most k rows per (query, shard), never the
-   * candidate sets. Output: (qid, rank, nid, dist).
-   */
-  def searchMany(index: Dataset[GraphRow], queries: Array[(Long, Array[Float])],
-      k: Int, params: Params = Params()): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val p = params
-    val qs = queries
-    val candidates = index.groupByKey(_.part_id)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_.id)
-        val vecs = rows.map(_.vec)
-        val adj = rows.map(_.nbrs.toIndexedSeq)
-        val entries = entryPoints(rows.length, p.nEntries)
-        qs.iterator.flatMap { case (qid, qv) =>
-          beam(vecs, adj(_), qv, math.max(p.efSearch, k), entries, p.metric)
-            .toArray.map { case (d, i) =>
-              (qid, rows(i).id, finalizeDist(p.metric, d)) }
-        }
-      }
-      .toDF("qid", "nid", "dist")
-      .select(col("qid"), col("nid"), round(col("dist"), 6).as("dist"))
-    graft.operators.Knn.explodeTopK(
-      candidates.groupBy(col("qid"))
-        .agg(graft.operators.Knn.topKPairs(col("nid"), col("dist"), k).as("nn")))
-  }
-
-  /**
    * Routed MANY-query ANN over a cluster-sharded index — the 100 TB
-   * workload shape. Routing happens once on the driver (queries are
-   * broadcast-sized by the same contract as [[searchMany]]): each query
-   * maps to its nprobe nearest lists through the IVF quantizer, giving
-   * a shard -> queries table that rides into the shard pass as a
-   * closure. Each shard then beams ONLY its routed queries — total beam
-   * work is ~nprobe/nlists of [[searchMany]]'s — and shards routed by
-   * no query are dropped by a part_id filter BEFORE the group pass, so
-   * a partitionBy(part_id)-persisted index prunes them at the parquet
-   * reader. The qid shuffle still carries at most k rows per
-   * (query, shard) via the bounded-heap partial aggregate.
-   * Output: (qid, rank, nid, dist).
-   */
-  def searchManyRouted(index: Dataset[GraphRow], model: Ivf.Model,
-      queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
-      params: Params = Params()): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val p = params
-    val byShard: Map[Int, Array[(Long, Array[Float])]] =
-      queries.flatMap { case (qid, qv) =>
-        model.probes(qv, nprobe).map(pid => (pid, (qid, qv)))
-      }.groupBy(_._1).map { case (pid, xs) => pid -> xs.map(_._2) }
-    val probed = byShard.keys.map(Integer.valueOf).toSeq
-    val candidates = index
-      .filter(col("part_id").isin(probed: _*))
-      .groupByKey(_.part_id)
-      .flatMapGroups { (pid, it) =>
-        val qs = byShard.getOrElse(pid, Array.empty[(Long, Array[Float])])
-        if (qs.isEmpty) Iterator.empty
-        else {
-          val rows = it.toArray.sortBy(_.id)
-          val vecs = rows.map(_.vec)
-          val adj = rows.map(_.nbrs.toIndexedSeq)
-          val entries = entryPoints(rows.length, p.nEntries)
-          qs.iterator.flatMap { case (qid, qv) =>
-            beam(vecs, adj(_), qv, math.max(p.efSearch, k), entries, p.metric)
-              .toArray.map { case (d, i) =>
-                (qid, rows(i).id, finalizeDist(p.metric, d)) }
-          }
-        }
-      }
-      .toDF("qid", "nid", "dist")
-      .select(col("qid"), col("nid"), round(col("dist"), 6).as("dist"))
-    graft.operators.Knn.explodeTopK(
-      candidates.groupBy(col("qid"))
-        .agg(graft.operators.Knn.topKPairs(col("nid"), col("dist"), k).as("nn")))
-  }
-
-  /**
-   * Routed many-query ANN with the queries as a DATAFRAME — the form
-   * whose query count is unbounded by driver memory (millions of
-   * queries: [[searchManyRouted]]'s Array contract caps out at
-   * broadcast size). Routing itself is distributed: each query row is
-   * tagged with its nprobe nearest lists through the broadcast-literal
-   * centroid table (same codegen'd argmin shape as Ivf.knnJoin), then
-   * EXPLODED to (part_id, qid, qv) and cogrouped with the index shards
-   * on part_id — queries reach their shards through a key-partitioned
-   * shuffle, never a driver array. Shards routed by no query are
-   * dropped by a left-semi join BEFORE the group pass (reader-level
-   * pruning on a partitionBy(part_id)-persisted index). Per-shard beam
-   * + bounded-heap rerank are identical to the array form, and
-   * AnnSpec asserts row-for-row agreement between the two.
-   * Output: (qid, rank, nid, dist).
+   * workload shape. Queries are a DataFrame, so their count is
+   * unbounded by driver memory. Routing is distributed: each query row
+   * is tagged with its nprobe nearest lists ([[Ivf.probeLists]], the
+   * column Ivf.knnJoin routes with), then EXPLODED to (part_id, qid, qv)
+   * and cogrouped with the index shards on part_id — queries reach
+   * their shards through a key-partitioned shuffle, never a driver
+   * array. Each shard beams ONLY its routed queries (total beam work
+   * ~nprobe/nlists of an unrouted search), and shards routed by no
+   * query are dropped by a left-semi join BEFORE the group pass
+   * (reader-level pruning on a partitionBy(part_id)-persisted index).
+   * The per-shard beam is [[search]]'s; the qid shuffle carries at most
+   * k rows per (query, shard) via the bounded-heap partial aggregate.
+   * AnnSpec asserts row-for-row agreement with per-query
+   * [[searchRouted]]. Output: (qid, rank, nid, dist).
    *
-   * `querySalt` addresses cogroup SKEW under Zipfian query load: the
-   * shard shuffle keys by part_id, so a shard most queries route to is
-   * one task. With salt S the queries split into S salt buckets (by
-   * qid) and the pruned shard rows replicate to every bucket — the hot
-   * shard's beam work spreads across S tasks at the cost of S× index
-   * shuffle volume. The default (querySalt = 0) DERIVES the salt from
-   * the routing itself: per-shard routed counts over a capped 100k
-   * query prefix (LocalLimit early-exit, so the probe pass costs O(cap)
-   * regardless of query-DF size; ≤ nlists result rows collect), salt 1
-   * when the load is near-uniform (max ≤ 3× mean: plan unchanged, no
-   * replication tax), else ceil(max/mean) capped at 16. Pass an
-   * explicit salt ≥ 1 to override. Results are salt-invariant (each
-   * query still beams against its full shard; AnnSpec asserts parity
-   * under a Zipfian load with no caller-side flag).
+   * Cogroup SKEW under Zipfian query load: the shard shuffle keys by
+   * part_id, so a shard most queries route to is one task. With salt S
+   * ([[routingSalt]], derived from the routing itself) the queries
+   * split into S salt buckets (by qid) and the pruned shard rows
+   * replicate to every bucket — the hot shard's beam work spreads
+   * across S tasks at the cost of S× index shuffle volume. Results are
+   * salt-invariant (each query still beams against its full shard;
+   * AnnSpec asserts parity under a Zipfian load).
    */
   def searchManyRoutedDF(index: Dataset[GraphRow], model: Ivf.Model,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
-      nprobe: Int, params: Params = Params(), querySalt: Int = 0): DataFrame = {
+      nprobe: Int, params: Params = Params()): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val p = params
-    // small centroid tables ride the plan as a codegen'd literal; big
-    // ones a broadcast variable + UDF (same threshold + rationale as
-    // Ivf.assign — O(nlists×dim) plan payload is the scale killer).
-    // Both produce Model.probes' exact (dist, id)-tiebreak order.
-    val probes: Column =
-      if (model.nlists <= Ivf.literalCentroidLimit(spark)) {
-        val cents = typedlit(model.centroids.map(_.toSeq).toSeq)
-        val dists = transform(cents,
-          c => graft.functions.VectorFunctions.l2SquaredDistance(col(qVecCol), c))
-        slice(transform(array_sort(
-          zip_with(dists, sequence(lit(0), lit(model.nlists - 1)),
-            (d, i) => struct(d.as("d"), i.as("i")))),
-          s => s.getField("i")), 1, nprobe)
-      } else {
-        val bc = spark.sparkContext.broadcast(model)
-        udf { qv: Seq[Float] => bc.value.probes(qv.toArray, nprobe).toArray }
-          .apply(col(qVecCol))
-      }
-    require(querySalt >= 0, "querySalt must be >= 0 (0 = derive from routing)")
+    val probes = Ivf.probeLists(spark, col(qVecCol), model, nprobe)
     val routed0 = queries.select(col(qIdCol).cast("long").as("qid"),
         col(qVecCol).cast("array<float>").as("qv"),
         explode(probes).as("part_id")) // sequence() ids are already int
-    val salt =
-      if (querySalt >= 1) querySalt
-      else {
-        // derive: per-shard routed counts over a CAPPED query prefix
-        // (LocalLimit early-exits the scan, so the extra routing pass
-        // costs O(cap) probes no matter how many queries the DF holds;
-        // ≤ nlists result rows collect). Skew detection only needs the
-        // count SHAPE, not exact totals — safe-by-default beats the
-        // opt-in flag that left Zipfian loads funneled through one task.
-        val cap = 100000
-        val cs = queries.select(col(qVecCol)).limit(cap)
-          .select(explode(probes).as("part_id"))
-          .groupBy(col("part_id")).agg(count(lit(1)).as("c"))
-          .select(col("c")).as[Long].collect()
-        if (cs.isEmpty) 1
-        else {
-          val mean = math.max(1L, cs.sum / cs.length)
-          val skew = cs.max.toDouble / mean
-          if (skew <= 3.0) 1 else math.min(math.ceil(skew).toInt, 16)
-        }
-      }
+    val salt = routingSalt(queries, qVecCol, probes)
     val routed = routed0.withColumn("salt",
         pmod(col("qid"), lit(salt)).cast("int"))
       .as[(Long, Array[Float], Int, Int)]
@@ -396,28 +262,41 @@ object Hnsw {
       .as[(Int, Long, Array[Float], Array[Int], Int)]
     val candidates = prunedSalted.groupByKey(r => (r._1, r._5))
       .cogroup(routed.groupByKey(r => (r._3, r._4))) { (_, idxIt, qIt) =>
-        val qs = qIt.toArray
-        if (qs.isEmpty) Iterator.empty
-        else {
-          val rows = idxIt.toArray.sortBy(_._2)
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val vecs = rows.map(_._3)
-            val adj = rows.map(_._4.toIndexedSeq)
-            val entries = entryPoints(rows.length, p.nEntries)
-            qs.iterator.flatMap { case (qid, qv, _, _) =>
-              beam(vecs, adj(_), qv, math.max(p.efSearch, k), entries, p.metric)
-                .toArray.map { case (d, i) =>
-                  (qid, rows(i)._2, finalizeDist(p.metric, d)) }
-            }
-          }
-        }
+        beamShard(idxIt.map(r => GraphRow(r._1, r._2, r._3, r._4)),
+          qIt.map(r => (r._1, r._2)).toArray, k, params)
       }
       .toDF("qid", "nid", "dist")
       .select(col("qid"), col("nid"), round(col("dist"), 6).as("dist"))
     graft.operators.Knn.explodeTopK(
       candidates.groupBy(col("qid"))
         .agg(graft.operators.Knn.topKPairs(col("nid"), col("dist"), k).as("nn")))
+  }
+
+  /**
+   * The cogroup salt of [[searchManyRoutedDF]], derived from the
+   * routing: per-shard routed counts over a CAPPED 100k query prefix
+   * (LocalLimit early-exits the scan, so this extra routing pass costs
+   * O(cap) probes no matter how many queries the DF holds; ≤ nlists
+   * result rows collect). Skew detection only needs the count SHAPE,
+   * not exact totals. Salt 1 when the load is near-uniform (max ≤ 3×
+   * mean: plan unchanged, no replication tax), else ceil(max/mean)
+   * capped at 16. `probes` is the routing column over `qVecCol`.
+   */
+  private[graft] def routingSalt(queries: DataFrame, qVecCol: String,
+      probes: Column): Int = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val cap = 100000
+    val cs = queries.select(col(qVecCol)).limit(cap)
+      .select(explode(probes).as("part_id"))
+      .groupBy(col("part_id")).agg(count(lit(1)).as("c"))
+      .select(col("c")).as[Long].collect()
+    if (cs.isEmpty) 1
+    else {
+      val mean = math.max(1L, cs.sum / cs.length)
+      val skew = cs.max.toDouble / mean
+      if (skew <= 3.0) 1 else math.min(math.ceil(skew).toInt, 16)
+    }
   }
 
   /**
@@ -429,21 +308,36 @@ object Hnsw {
       params: Params = Params()): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val q = query
-    val p = params
     index.groupByKey(_.part_id)
       .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_.id) // matches build order → nbrs valid
-        val vecs = rows.map(_.vec)
-        val adj = rows.map(_.nbrs.toIndexedSeq)
-        val res = beam(vecs, adj(_), q, math.max(p.efSearch, k),
-          entryPoints(rows.length, p.nEntries), p.metric)
-        res.toArray.map { case (d, i) =>
-          (rows(i).id, finalizeDist(p.metric, d)) }.iterator
+        beamShard(it, Array((0L, query)), k, params).map { case (_, nid, d) => (nid, d) }
       }
       .toDF("vec_id", "dist")
       .select(col("vec_id"), round(col("dist"), 6).as("dist"))
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
   }
+
+  /**
+   * Every query's beam through one shard's graph: the rows sort by id
+   * (the build's insertion order, so nbrs index correctly) and each
+   * query runs one beam at ef = max(efSearch, k) from the shard's
+   * spread entry points. Emits (qid, nid, dist), dist final but not
+   * rounded. A shard no query reaches is never read.
+   */
+  private def beamShard(shard: Iterator[GraphRow],
+      queries: Array[(Long, Array[Float])], k: Int,
+      p: Params): Iterator[(Long, Long, Double)] =
+    if (queries.isEmpty) Iterator.empty
+    else {
+      val rows = shard.toArray.sortBy(_.id)
+      val vecs = rows.map(_.vec)
+      val adj = rows.map(_.nbrs.toIndexedSeq)
+      val entries = entryPoints(rows.length, p.nEntries)
+      queries.iterator.flatMap { case (qid, qv) =>
+        beam(vecs, adj(_), qv, math.max(p.efSearch, k), entries, p.metric)
+          .toArray.map { case (d, i) =>
+            (qid, rows(i).id, finalizeDist(p.metric, d)) }
+      }
+    }
 }

@@ -48,6 +48,10 @@ object Ivf {
     Model(model.clusterCenters.map(_.toArray.map(_.toFloat)))
   }
 
+  /** List count above which [[buildSampled]] trains MLlib k-means on
+    * its sample instead of the driver-local [[LocalKMeans]]. */
+  private final val LocalKmeansMaxLists = 128
+
   /**
    * Train list centroids on a BOUNDED SAMPLE with a driver-local
    * Lloyd's — the reference's own build shape (ivfkmeans.cpp trains
@@ -60,14 +64,13 @@ object Ivf {
    * ~2 s per statement at sf0.1). At 100 TB the single bounded
    * sampling pass replaces ~25 full-corpus passes.
    *
-   * Above `graft.ivf.localKmeansMaxLists` (default 128) the
-   * single-threaded fit — O(sample × nlists × dim) per iteration with
-   * sample = 50·nlists — would itself become the bottleneck, so there
-   * the SAME deterministic bounded sample is drawn distributedly and
-   * MLlib trains on the sample (never the corpus): CREATE INDEX stays
-   * one bounded corpus pass at ANY list count; only the ~25 k-means
-   * jobs' INPUT changes from 100 TB to 50·nlists rows. (Parameterized,
-   * not a local-mode constant.)
+   * Above `LocalKmeansMaxLists` (128) lists the single-threaded
+   * fit — O(sample × nlists × dim) per iteration with sample =
+   * 50·nlists — would itself become the bottleneck, so there the SAME
+   * deterministic bounded sample is drawn distributedly and MLlib
+   * trains on the sample (never the corpus): CREATE INDEX stays one
+   * bounded corpus pass at ANY list count; only the ~25 k-means jobs'
+   * INPUT changes from 100 TB to 50·nlists rows.
    *
    * Sample membership is fully deterministic: the TakeOrdered orders
    * by (xxhash64(v), v), so rows colliding at the cut boundary are
@@ -75,8 +78,6 @@ object Ivf {
    */
   def buildSampled(corpus: DataFrame, vecCol: String, nlists: Int,
       seed: Long = 42L): Model = {
-    val maxLocal = corpus.sparkSession.conf
-      .get("graft.ivf.localKmeansMaxLists", "128").toInt
     // ivfkmeans.cpp samples 50*lists; the floor keeps thin corpora whole
     val target = math.max(10000, 50 * nlists)
     val drawnDf = corpus
@@ -84,7 +85,7 @@ object Ivf {
       .where(col("v").isNotNull)
       .select(xxhash64(col("v")).as("h"), col("v"))
       .orderBy(col("h"), col("v")).limit(target)
-    if (nlists > maxLocal) {
+    if (nlists > LocalKmeansMaxLists) {
       // mid regime (the r19 cliff): one bounded sampling pass, then
       // the distributed trainer over the SAMPLE — job count stays flat
       // in corpus size, fit parallelism scales with nlists
@@ -112,11 +113,6 @@ object Ivf {
   }
 
   /**
-   * Tag every corpus row with its nearest list id. Shuffle-free: the
-   * centroid table is a broadcast literal scanned per row with
-   * transform/array_position (stays inside whole-stage codegen).
-   */
-  /**
    * Centroid-table size up to which routing/assignment embeds the
    * centroids as a codegen'd array LITERAL (fastest per row: no UDF
    * boxing, whole-stage codegen). Above it the centroids ride a Spark
@@ -129,6 +125,11 @@ object Ivf {
       spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.get("graft.ivf.literalCentroidLimit", "1024").toInt
 
+  /**
+   * Tag every corpus row with its nearest list id. Shuffle-free: the
+   * centroid table is a broadcast literal scanned per row with
+   * transform/array_position (stays inside whole-stage codegen).
+   */
   def assign(corpus: DataFrame, vecCol: String, model: Model): DataFrame =
     if (model.nlists <= literalCentroidLimit(corpus.sparkSession)) {
       val cents: Column = typedlit(model.centroids.map(_.toSeq).toSeq)
@@ -139,6 +140,28 @@ object Ivf {
       val bc = corpus.sparkSession.sparkContext.broadcast(model)
       val nearest = udf { qv: Seq[Float] => bc.value.probes(qv.toArray, 1).head }
       corpus.withColumn("list_id", nearest(col(vecCol)))
+    }
+
+  /**
+   * The nprobe nearest list ids of the query vector `qv`, best first,
+   * in [[Model.probes]]' exact (dist, id) order — the routing column of
+   * [[knnJoin]] and Hnsw.searchManyRoutedDF. Up to
+   * [[literalCentroidLimit]] lists the centroids ride the plan as a
+   * codegen'd literal; above it a broadcast variable + UDF.
+   */
+  private[graft] def probeLists(spark: org.apache.spark.sql.SparkSession,
+      qv: Column, model: Model, nprobe: Int): Column =
+    if (model.nlists <= literalCentroidLimit(spark)) {
+      val cents: Column = typedlit(model.centroids.map(_.toSeq).toSeq)
+      val dists = transform(cents, c => VF.l2SquaredDistance(qv, c))
+      slice(transform(array_sort(
+        zip_with(dists, sequence(lit(0), lit(model.nlists - 1)),
+          (d, i) => struct(d.as("d"), i.as("i")))),
+        s => s.getField("i")), 1, nprobe)
+    } else {
+      val bc = spark.sparkContext.broadcast(model)
+      udf { v: Seq[Float] => bc.value.probes(v.toArray, nprobe).toArray }
+        .apply(qv)
     }
 
   /** Persist centroids as a tiny parquet table (index metadata). */
@@ -260,19 +283,12 @@ object Ivf {
   def knnJoin(queries: DataFrame, qVecCol: String, qIdCol: String,
       tagged: DataFrame, vecCol: String, idCol: String, model: Model,
       k: Int, nprobe: Int): DataFrame = {
-    val cents: Column = typedlit(model.centroids.map(_.toSeq).toSeq)
     // bound to `queries` itself: a bare col(qVecCol) inside the lambda
     // would resolve against the "qv" alias of the select below when the
     // caller's column is itself named qv
     val qv = queries(qVecCol)
-    val dists = transform(cents, c => VF.l2SquaredDistance(qv, c))
-    // probe lists per query: indices of the nprobe smallest centroid dists
-    val probes = slice(transform(array_sort(
-      zip_with(dists, sequence(lit(0), lit(model.nlists - 1)),
-        (d, i) => struct(d.as("d"), i.as("i")))),
-      s => s.getField("i")), 1, nprobe)
     val q = queries.select(col(qIdCol).as("qid"), qv.as("qv"),
-        explode(probes).as("list_id"))
+        explode(probeLists(queries.sparkSession, qv, model, nprobe)).as("list_id"))
     // only the join key survives on both sides: the corpus may carry
     // columns named like the query side's (qid, qv)
     val c = tagged.select(col("list_id"), col(idCol).cast("long").as("nid"),

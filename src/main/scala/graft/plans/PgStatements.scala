@@ -2186,7 +2186,7 @@ object PgStatements {
       * (normalize / augment / proxy fold); when k-means was the MLlib
       * distributed trainer its ~25 scans made a checkpoint worthwhile —
       * Ivf.buildSampled scans ONCE for its bounded sample at ANY list
-      * count (above localKmeansMaxLists the distributed trainer runs
+      * count (above its 128-list cutoff the distributed trainer runs
       * on the sample, never the corpus) and once more for the
       * assignment write, so recomputing the cheap map transform beats
       * paying a full checkpoint write + read of the corpus (r19

@@ -293,8 +293,8 @@ object AnnSuite {
     // routing filter prunes whole shard directories at the parquet
     // reader (PartitionFilters asserted in PlanContractSpec) — an index
     // is a build-once artifact, not per-query work. Approximate, so the
-    // oracle checks per-query invariants; recall vs unrouted searchMany
-    // is asserted in AnnSpec.
+    // oracle checks per-query invariants; recall vs unrouted per-query
+    // search is asserted in AnnSpec.
     Gated("hnsw_routed", (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val path = s"target/graft-nsw/${new java.io.File(dir).getName}"
@@ -318,7 +318,7 @@ object AnnSuite {
       val index = s.read.parquet(path).as[Hnsw.GraphRow]
       // DataFrame-native routing: queries stay distributed end-to-end
       // (no driver collect), so |Q| is unbounded — the 100 TB shape.
-      // AnnSpec asserts this form row-for-row equals the array form.
+      // AnnSpec asserts this form row-for-row equals per-query routed search.
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding"))
       val routed = Hnsw.searchManyRoutedDF(index, model, qs,

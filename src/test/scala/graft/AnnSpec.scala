@@ -256,21 +256,31 @@ class AnnSpec extends SparkSpec {
     assert(fullRecall >= recall)
   }
 
+  /** Per-query reference rows in the many-query output shape
+    * (qid, rank, nid, dist): one single-query search per distinct
+    * query vector, ranked in its (dist, vec_id) order. */
+  private def perQuery(qsDf: org.apache.spark.sql.DataFrame)(
+      search: Array[Float] => org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
+    val qs = qsDf.as[(Long, Seq[Float])].collect()
+    val byVec = qs.map(_._2).distinct.map { v =>
+      v -> search(v.toArray).select("vec_id", "dist").as[(Long, Double)].collect()
+    }.toMap
+    qs.flatMap { case (qid, v) =>
+      byVec(v).zipWithIndex.map { case ((nid, d), i) => Seq[Any](qid, i + 1, nid, d) }
+    }.toSet
+  }
+
   test("nsw many-query search: per-query results match single-query search") {
     val params = Hnsw.Params(m = 8, efConstruction = 48, efSearch = 32)
-    val index = Hnsw.buildIndex(emb, "embedding", "vec_id", numParts = 4, params).cache()
-    val qs = emb.filter($"vec_id" < 3)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
-      .map { case (id, v) => (id, v.toArray) }
-    val many = Hnsw.searchMany(index, qs, 5, params)
-      .collect().groupBy(_.getLong(0))
-    for ((qid, qv) <- qs) {
-      val single = Hnsw.search(index, qv, 5, params)
-        .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
-      val got = many(qid).sortBy(_.getInt(1))
-        .map(r => (r.getLong(2), r.getDouble(3))).toSeq
-      assert(got == single, s"qid=$qid: $got != $single")
-    }
+    val model = Ivf.build(emb, "embedding", nlists = 4)
+    val index = Hnsw.buildIndexClustered(emb, "embedding", "vec_id", model, params).cache()
+    val qsDf = emb.filter($"vec_id" < 3).select($"vec_id", $"embedding")
+    // nprobe = nlists routes every query to every shard: the many-query
+    // form must return each single-query search's rows at their ranks
+    val many = Hnsw.searchManyRoutedDF(index, model, qsDf,
+        "vec_id", "embedding", 5, nprobe = 4, params)
+      .collect().map(_.toSeq).toSet
+    assert(many == perQuery(qsDf)(qv => Hnsw.search(index, qv, 5, params)))
   }
 
   test("routed many-query search: ~nprobe/nlists beam work, recall holds") {
@@ -278,80 +288,95 @@ class AnnSpec extends SparkSpec {
     val model = Ivf.build(emb, "embedding", nlists = 8)
     val clustered = Hnsw.buildIndexClustered(emb, "embedding", "vec_id", model, params).cache()
     val hashed = Hnsw.buildIndex(emb, "embedding", "vec_id", numParts = 8, params).cache()
-    val qs = emb.filter($"vec_id" < 10)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
-      .map { case (id, v) => (id, v.toArray) }
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.select("qid", "nid").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val qsDf = emb.filter($"vec_id" < 10).select($"vec_id", $"embedding")
+    val qs = qsDf.as[(Long, Seq[Float])].collect()
+    def recallOf(rows: Set[Seq[Any]]): Double = {
+      val got = rows.toSeq.groupBy(_.head.asInstanceOf[Long])
+        .view.mapValues(_.map(_(2).asInstanceOf[Long]).toSet).toMap
       qs.map { case (qid, qv) =>
-        val exact = Knn.exactTopK(emb, "embedding", "vec_id", qv, 5)
+        val exact = Knn.exactTopK(emb, "embedding", "vec_id", qv.toArray, 5)
           .select("vec_id").as[Long].collect().toSet
         (got.getOrElse(qid, Set.empty) & exact).size / 5.0
       }.sum / qs.length
     }
+    def routedRows(nprobe: Int): Set[Seq[Any]] =
+      Hnsw.searchManyRoutedDF(clustered, model, qsDf,
+          "vec_id", "embedding", 5, nprobe, params)
+        .collect().map(_.toSeq).toSet
     // routed beams touch nprobe/nlists = half the shards; unrouted
-    // searchMany beams all of them on hash shards. Clustered routing
-    // must hold recall at half the beam work (isotropic data is the
-    // worst case for routing, hence >= unrouted - 0.1 not strict >=).
-    val routed = recallOf(Hnsw.searchManyRouted(clustered, model, qs, 5, nprobe = 4, params))
-    val unrouted = recallOf(Hnsw.searchMany(hashed, qs, 5, params))
+    // per-query search beams all of them on hash shards. Clustered
+    // routing must hold recall at half the beam work (isotropic data is
+    // the worst case for routing, hence >= unrouted - 0.1 not strict >=).
+    val routed = recallOf(routedRows(4))
+    val unrouted = recallOf(perQuery(qsDf)(qv => Hnsw.search(hashed, qv, 5, params)))
     assert(routed >= unrouted - 0.1,
       s"routed recall $routed collapsed vs unrouted $unrouted")
     assert(routed >= 0.6, s"routed recall=$routed")
     // full-probe routing degenerates to searching every shard: results
-    // must match searchMany on the SAME clustered index exactly
-    val full = Hnsw.searchManyRouted(clustered, model, qs, 5, nprobe = 8, params)
-      .collect().map(_.toSeq).toSet
-    val all = Hnsw.searchMany(clustered, qs, 5, params)
-      .collect().map(_.toSeq).toSet
-    assert(full == all)
+    // must match per-query search on the SAME clustered index exactly
+    val all = perQuery(qsDf)(qv => Hnsw.search(clustered, qv, 5, params))
+    assert(routedRows(8) == all)
   }
 
-  test("DataFrame-form routed many-query search equals the array form") {
+  test("DataFrame-form routed many-query search equals per-query routed search") {
     val params = Hnsw.Params(m = 8, efConstruction = 48, efSearch = 32)
     val model = Ivf.build(emb, "embedding", nlists = 8)
     val clustered = Hnsw.buildIndexClustered(emb, "embedding", "vec_id", model, params).cache()
     val qsDf = emb.filter($"vec_id" < 10).select($"vec_id", $"embedding")
-    val qs = qsDf.as[(Long, Seq[Float])].collect().map { case (id, v) => (id, v.toArray) }
     // the DF form must agree row-for-row (same probes, same beams, same
-    // rerank) — distributed routing is a pure re-plumbing of the array
-    // form, not a different algorithm
-    val arr = Hnsw.searchManyRouted(clustered, model, qs, 5, nprobe = 4, params)
-      .collect().map(_.toSeq).toSet
+    // rerank) — distributed routing is a pure re-plumbing of per-query
+    // routed search, not a different algorithm
+    val ref = perQuery(qsDf)(qv => Hnsw.searchRouted(clustered, model, qv, 5, nprobe = 4, params))
     val dfForm = Hnsw.searchManyRoutedDF(clustered, model, qsDf,
         "vec_id", "embedding", 5, nprobe = 4, params)
       .collect().map(_.toSeq).toSet
-    assert(dfForm == arr)
-    // skew-salted form: shard replication across salt buckets must be
-    // result-invariant (each query still beams against its full shard)
-    val salted = Hnsw.searchManyRoutedDF(clustered, model, qsDf,
-        "vec_id", "embedding", 5, nprobe = 4, params, querySalt = 3)
-      .collect().map(_.toSeq).toSet
-    assert(salted == arr)
+    assert(dfForm == ref)
   }
 
-  test("auto salt (default): Zipfian query load matches the array form, no flag") {
-    val params = Hnsw.Params(m = 8, efConstruction = 48, efSearch = 32)
-    val model = Ivf.build(emb, "embedding", nlists = 8)
-    val clustered = Hnsw.buildIndexClustered(emb, "embedding", "vec_id", model, params).cache()
-    // Zipfian load: 60 queries reuse vector 0's embedding (distinct
-    // qids), so their probes all land on the same shard set; 4 uniform
-    // queries ride along. max/mean per-shard routed counts > 3 → the
-    // DEFAULT path must derive salt > 1 on its own and still agree with
-    // the (salt-free) array form row for row.
+  /** A Zipfian query load: 60 queries reuse vector 0's embedding
+    * (distinct qids 100..159), so their probes all land on the same
+    * shard set; `uniform` queries (vec_id 0 until uniform) ride along. */
+  private def zipfianQueries(uniform: Int) = {
     val hot = emb.filter($"vec_id" === 0).select($"embedding").as[Seq[Float]].head()
     val hotDf = spark.range(100, 160).select($"id".cast("long").as("vec_id"),
       typedlit(hot).cast("array<float>").as("embedding"))
-    val qsDf = emb.filter($"vec_id" < 4).select($"vec_id", $"embedding")
-      .unionByName(hotDf)
-    val qs = qsDf.as[(Long, Seq[Float])].collect().map { case (id, v) => (id, v.toArray) }
-    val arr = Hnsw.searchManyRouted(clustered, model, qs, 5, nprobe = 2, params)
-      .collect().map(_.toSeq).toSet
+    emb.filter($"vec_id" < uniform).select($"vec_id", $"embedding").unionByName(hotDf)
+  }
+
+  test("auto salt (default): Zipfian query load matches per-query routed search, no flag") {
+    val params = Hnsw.Params(m = 8, efConstruction = 48, efSearch = 32)
+    val model = Ivf.build(emb, "embedding", nlists = 8)
+    val clustered = Hnsw.buildIndexClustered(emb, "embedding", "vec_id", model, params).cache()
+    // the DEFAULT path derives the salt on its own and must still agree
+    // with per-query routed search row for row
+    val qsDf = zipfianQueries(4)
+    val ref = perQuery(qsDf)(qv => Hnsw.searchRouted(clustered, model, qv, 5, nprobe = 2, params))
     val auto = Hnsw.searchManyRoutedDF(clustered, model, qsDf,
         "vec_id", "embedding", 5, nprobe = 2, params)
       .collect().map(_.toSeq).toSet
-    assert(auto == arr)
+    assert(auto == ref)
+  }
+
+  test("routing salt: a Zipfian load derives salt > 1, a uniform load derives 1") {
+    val params = Hnsw.Params(m = 8, efConstruction = 48, efSearch = 32)
+    val model = Ivf.build(emb, "embedding", nlists = 8)
+    def saltOf(qsDf: org.apache.spark.sql.DataFrame, nprobe: Int): Int =
+      Hnsw.routingSalt(qsDf, "embedding",
+        Ivf.probeLists(spark, col("embedding"), model, nprobe))
+    val uniform = saltOf(emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"), 4)
+    assert(uniform == 1, s"uniform load derived salt $uniform")
+    // 60 of 70 queries on one of 8 shards: max/mean per-shard routed
+    // counts > 3, so the shard rows replicate across salt buckets — and
+    // the salted cogroup must still agree with per-query routed search
+    val qsDf = zipfianQueries(10)
+    val zipf = saltOf(qsDf, 1)
+    assert(zipf > 1, s"Zipfian load derived salt $zipf")
+    val clustered = Hnsw.buildIndexClustered(emb, "embedding", "vec_id", model, params).cache()
+    val ref = perQuery(qsDf)(qv => Hnsw.searchRouted(clustered, model, qv, 5, nprobe = 1, params))
+    val salted = Hnsw.searchManyRoutedDF(clustered, model, qsDf,
+        "vec_id", "embedding", 5, nprobe = 1, params)
+      .collect().map(_.toSeq).toSet
+    assert(salted == ref)
   }
 
   test("pq: codes are m bytes, encode is deterministic, adc+rerank recalls") {
@@ -402,8 +427,8 @@ class AnnSpec extends SparkSpec {
 
   test("broadcast-centroid routing equals the literal-centroid plan") {
     // force the big-nlists path (broadcast variable + UDF) and assert
-    // row-for-row parity with the codegen'd literal form for both
-    // assignment and DF-routed search
+    // row-for-row parity with the codegen'd literal form for
+    // assignment, DF-routed search and the IVF knn join
     val params = Hnsw.Params(m = 8, efConstruction = 48, efSearch = 32)
     val model = Ivf.build(emb, "embedding", nlists = 8)
     val qsDf = emb.filter($"vec_id" < 10).select($"vec_id", $"embedding")
@@ -425,6 +450,13 @@ class AnnSpec extends SparkSpec {
         .collect().map(_.toSeq).toSet
     }
     assert(routedLit == routedBc)
+    val tagged = Ivf.assign(emb, "embedding", model)
+    val (joinLit, joinBc) = both {
+      Ivf.knnJoin(qsDf, "embedding", "vec_id", tagged,
+          "embedding", "vec_id", model, 5, nprobe = 4)
+        .collect().map(_.toSeq).toSet
+    }
+    assert(joinLit == joinBc)
   }
 
   test("shard compaction equals a fresh clustered build on the same rows") {
